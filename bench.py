@@ -35,14 +35,14 @@ from flink_join_scaling_spark.session import get_spark  # noqa: E402
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     try:
         sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf"))
     except ValueError:
         sf = -1.0
     # split file scans small: bench data is a few MB/table, so Spark's
-    # default 128m split turns every scan into one task on 32 cores
-    # (on a real cluster at real scale the default is correct)
+    # default 128m split turns every scan into one task, idling the
+    # other cores (on a real cluster at real scale the default is correct)
     spark = get_spark(
         app_name="fjss-bench",
         cpus=cpus,

@@ -14,12 +14,7 @@ O(touched keys × live ids) work, state is exactly compacted (the
 ``VersioningEvictor``'s goal, minus its every-5th-record amortization
 and its Y-side bug, ``versionDeduplicator.scala:100``), and emission
 is the reference's changelog: the key's updated full join result
-whenever the key receives data. Where the runtime ships
-``transformWithStateInPandas``'s protobuf wire protocol, the join
-automatically routes to a per-(side, id) MapState layout instead
-(``engine="auto"`` + :func:`mapstate_available`), shrinking per-batch
-state I/O from O(live ids) to O(touched ids); this sandbox lacks
-protobuf, so the GroupState fold below is the tested path here.
+whenever the key receives data.
 
 Records are carried as JSON payloads so one processor serves any
 schema; callers wrap/unwrap with ``to_json``/``from_json``. At scale
@@ -43,7 +38,6 @@ same ``ttl_ms`` eviction that bounds state growth overall.
 from __future__ import annotations
 
 import json
-import logging
 from collections.abc import Iterator
 
 import pandas as pd
@@ -67,48 +61,6 @@ _STATE_SCHEMA = "xs string, ys string"
 #: null event time ranks below every real timestamp — Arrow hands a
 #: null long to pandas as float NaN, and int(NaN) would kill the query
 _TS_NULL_SENTINEL = -(1 << 63)
-
-
-def mapstate_available() -> bool:
-    """Runtime feature-probe for ``transformWithStateInPandas``: its
-    state round-trips are serialized with google.protobuf, which some
-    sandboxes (including this repo's CI image) don't ship — the Python
-    classes import fine, but the wire-protocol module doesn't. Probed
-    once per call site at query build, so the per-(side,id) MapState
-    engine lights up automatically wherever protobuf exists, with
-    ``applyInPandasWithState`` as the documented fallback (SURVEY
-    §4.3)."""
-    try:
-        import pyspark.sql.streaming.proto.StateMessage_pb2  # noqa: F401
-        from pyspark.sql.group import GroupedData
-
-        return hasattr(GroupedData, "transformWithStateInPandas")
-    except Exception:
-        return False
-
-
-def _resolve_engine(engine: str) -> str:
-    if engine not in ("auto", "mapstate", "groupstate"):
-        raise ValueError(f"unsupported engine={engine!r}")
-    if engine == "auto":
-        resolved = "mapstate" if mapstate_available() else "groupstate"
-        # an 'auto' caller gets whichever engine the runtime supports —
-        # make the choice visible at query build so a deployment that
-        # gains protobuf can see the switch in its logs
-        logging.getLogger(__name__).info(
-            "stream_join engine='auto' resolved to %r "
-            "(transformWithStateInPandas protobuf %savailable)",
-            resolved,
-            "" if resolved == "mapstate" else "un",
-        )
-        return resolved
-    if engine == "mapstate" and not mapstate_available():
-        raise RuntimeError(
-            "engine='mapstate' requires transformWithStateInPandas' "
-            "protobuf wire protocol (google.protobuf is not importable "
-            "here); use engine='auto' to fall back automatically"
-        )
-    return engine
 
 
 def _dump_state(xs: dict, ys: dict) -> tuple[str, str]:
@@ -144,52 +96,35 @@ def tag_side(df: DataFrame, key, id_, ts, side: int) -> DataFrame:
     )
 
 
-def _reduce_batch(pdfs: Iterator[pd.DataFrame]) -> pd.DataFrame | None:
-    """Reduce a micro-batch of tagged rows to one row per (side, id),
-    last-writer-wins on (ts, payload) — pandas sort + groupby-tail
-    (mirroring the batch cogroup), so Python-level work is O(touched
-    ids), not O(rows). Shared by the GroupState fold and the MapState
-    processor so the two engines cannot drift."""
-    frames = [pdf for pdf in pdfs if len(pdf)]
-    if not frames:
-        return None
-    allp = pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
-    if allp["ts"].isna().any():
-        # defense for callers that bypass tag_side (which maps null ts
-        # to the sentinel JVM-side, so this branch is normally dead):
-        # round-trip through pandas nullable Int64 so the non-null rows
-        # keep full 64-bit precision if the column arrived integral —
-        # a plain float fillna would re-cast everything through float64
-        allp = allp.assign(
-            ts=allp["ts"].astype("Int64").fillna(_TS_NULL_SENTINEL).astype("int64")
-        )
-    return (
-        allp.sort_values(["ts", "payload"], kind="stable")
-        .groupby(["side", "id"], sort=False)
-        .tail(1)
-    )
-
-
 def _fold_latest(
     xs: dict[str, list], ys: dict[str, list], pdfs: Iterator[pd.DataFrame]
 ) -> bool:
     """Fold a micro-batch of tagged rows into the two id→[ts, payload]
     maps, last-writer-wins on (ts, payload). Returns True iff any map
     entry changed — a batch of stale versions leaves state untouched,
-    and the caller skips the O(state) serialize + store write."""
-    latest = _reduce_batch(pdfs)
-    if latest is None:
-        return False
+    and the caller skips the O(state) serialize + store write.
+
+    A plain loop over the columns as Python lists: a key's batch holds
+    a handful of rows, too few to repay pandas' per-call overhead."""
     changed = False
-    for side, id_, ts, payload in latest[["side", "id", "ts", "payload"]].itertuples(
-        index=False, name=None
-    ):
-        m = xs if int(side) == 0 else ys
-        cur = m.get(id_)
-        new = [int(ts), payload]
-        if cur is None or (cur[0], cur[1]) < (new[0], new[1]):
-            m[id_] = new
-            changed = True
+    for pdf in pdfs:
+        ts = pdf["ts"]
+        if ts.hasnans:
+            # defense for callers that bypass tag_side (which maps null
+            # ts to the sentinel JVM-side, so this branch is normally
+            # dead): a null ts ranks below every real version
+            ts = ts.astype("Int64").fillna(_TS_NULL_SENTINEL).astype("int64")
+        for side, id_, t, payload in zip(
+            pdf["side"].tolist(),
+            pdf["id"].tolist(),
+            ts.tolist(),
+            pdf["payload"].tolist(),
+        ):
+            m = xs if side == 0 else ys
+            cur = m.get(id_)
+            if cur is None or (cur[0], cur[1]) < (t, payload):
+                m[id_] = [t, payload]
+                changed = True
     return changed
 
 
@@ -274,111 +209,26 @@ def _grouped_join_fn(how: str):
     return fn
 
 
-def _make_tws_processor(how: str, grouped: bool, ttl_ms: int | None):
-    """Build the ``transformWithStateInPandas`` StatefulProcessor for
-    the versioned join — the per-(side, id) MapState layout the
-    GroupState engine documents as its ceiling: an arriving version
-    rewrites ONLY its own (side, id) entry (O(touched ids) state I/O
-    per batch), instead of re-serializing the key's whole id→latest
-    map (O(live ids)). Emission and last-writer-wins semantics are
-    shared with the GroupState engine via :func:`_reduce_batch`, so
-    converged results are identical by construction.
-
-    ``ttl_ms`` here is PER-ENTRY (MapState value TTL: an id's entry
-    expires ttl after its own last write), a slightly tighter bound
-    than the GroupState engine's whole-key idle eviction — both cap
-    state by staleness; tests treat TTL'd comparisons engine-local.
-
-    Only constructed when :func:`mapstate_available` — the import is
-    deferred so the module loads in protobuf-less sandboxes."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _VersionedJoinProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._latest = handle.getMapState(
-                "latest",
-                "side long, id string",
-                "ts long, payload string",
-                ttlDurationMs=ttl_ms,
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            latest = _reduce_batch(rows)
-            if latest is not None:
-                for side, id_, ts, payload in latest[
-                    ["side", "id", "ts", "payload"]
-                ].itertuples(index=False, name=None):
-                    mk = (int(side), id_)
-                    cur = self._latest.getValue(mk)
-                    new = (int(ts), payload)
-                    if cur is None or (int(cur[0]), cur[1]) < new:
-                        self._latest.updateValue(mk, new)
-            xs: dict[str, str] = {}
-            ys: dict[str, str] = {}
-            for (side, id_), (_ts, payload) in self._latest.iterator():
-                (xs if int(side) == 0 else ys)[id_] = payload
-            k = key[0]
-            if grouped:
-                if how == "left_outer_seq" and not xs:
-                    return
-                latest_x = [xs[i] for i in sorted(xs)]
-                latest_y = [ys[i] for i in sorted(ys)]
-                yield pd.DataFrame(
-                    [(k, json.dumps(latest_x), json.dumps(latest_y))],
-                    columns=["k", "xs_json", "ys_json"],
-                )
-                return
-            latest_x = list(xs.values())
-            latest_y = list(ys.values())
-            out: list[tuple] = []
-            if latest_x and latest_y:
-                out = [(k, x, y) for x in latest_x for y in latest_y]
-            elif latest_x and how != "inner":
-                out = [(k, x, None) for x in latest_x]
-            elif latest_y and how == "full_outer":
-                out = [(k, None, y) for y in latest_y]
-            if out:
-                yield pd.DataFrame(out, columns=["k", "x_payload", "y_payload"])
-
-        def close(self) -> None:
-            pass
-
-    return _VersionedJoinProcessor()
-
-
 def _stateful_join(
     union_subkeyed: DataFrame,
     how: str,
     grouped: bool,
     ttl_ms: int | None,
-    engine: str,
 ) -> DataFrame:
-    """Route the keyed stateful operator by engine: per-(side,id)
-    MapState (``transformWithStateInPandas``) where the runtime
-    supports it, the GroupState whole-map fold otherwise."""
+    """The keyed stateful operator: the GroupState whole-map fold per
+    ``(k, __sub)`` group."""
     g = union_subkeyed.groupBy("k", "__sub")
-    out_schema = GROUPED_OUT_SCHEMA if grouped else OUT_SCHEMA
-    if _resolve_engine(engine) == "mapstate":
-        return g.transformWithStateInPandas(
-            statefulProcessor=_make_tws_processor(how, grouped, ttl_ms),
-            outputStructType=out_schema,
-            outputMode="update",
-            timeMode="processingTime" if ttl_ms is not None else "none",
-        )
     if grouped:
         return g.applyInPandasWithState(
             _grouped_join_fn(how),
-            outputStructType=out_schema,
+            outputStructType=GROUPED_OUT_SCHEMA,
             stateStructType=_STATE_SCHEMA,
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     return g.applyInPandasWithState(
         _join_fn(how, ttl_ms),
-        outputStructType=out_schema,
+        outputStructType=OUT_SCHEMA,
         stateStructType=_STATE_SCHEMA,
         outputMode="update",
         timeoutConf=(
@@ -429,15 +279,13 @@ def stream_join_versioned_grouped(
     ts_x,
     ts_y,
     how: str = "full_outer_seq",
-    engine: str = "groupstate",
 ) -> DataFrame:
     """Streaming grouped versioned join (reference O8/O9 continuous):
     changelog of (k, xs_json, ys_json) — per touched key, the JSON
     arrays of current latest versions per side. Converged semantics
     (last emission per key) equal batch ``join_full_outer_seq`` /
     ``join_left_outer_seq``; one output row per key per micro-batch
-    instead of the exploded variant's cross product. ``engine`` as in
-    :func:`stream_join_versioned`."""
+    instead of the exploded variant's cross product."""
     if how not in ("full_outer_seq", "left_outer_seq"):
         raise ValueError(f"unsupported how={how!r}")
     union = tag_side(sx, key_x, id_x, ts_x, 0).unionByName(
@@ -445,7 +293,7 @@ def stream_join_versioned_grouped(
     )
     return _stateful_join(
         _with_null_subkey(union, how, grouped=True),
-        how, grouped=True, ttl_ms=None, engine=engine,
+        how, grouped=True, ttl_ms=None,
     )
 
 
@@ -502,7 +350,6 @@ def stream_join_versioned(
     ts_y,
     how: str = "full_outer",
     ttl_ms: int | None = None,
-    engine: str = "groupstate",
 ) -> DataFrame:
     """Streaming versioned join of two tagged streams; returns the
     changelog DataFrame (k, x_payload, y_payload). Converged semantics
@@ -513,20 +360,6 @@ def stream_join_versioned(
     this is where state actually grows (the repo's namesake concern);
     default keeps reference-faithful forever-state.
 
-    ``engine``: ``"groupstate"`` (default) is the whole-map
-    GroupState fold (O(live ids) state I/O per state-changing batch)
-    — the engine every converged==batch and restart-recovery test in
-    this repo has actually executed. ``"auto"`` opts in to the
-    per-(side, id) MapState layout (``transformWithStateInPandas``,
-    O(touched ids) per batch) wherever the runtime's protobuf wire
-    protocol exists, falling back to GroupState otherwise;
-    ``"mapstate"`` forces it (raises where unsupported). Auto is NOT
-    the default on purpose: this repo's CI lacks protobuf, so the
-    MapState branch has never run here, and its TTL semantics
-    intentionally differ (per-entry vs whole-key idle eviction) — a
-    protobuf-bearing deployment must not silently switch engines for
-    existing callers. The resolved engine is logged at query build.
-
     Unwrap payloads with ``F.from_json(col, schema)`` downstream.
     """
     if how not in ("full_outer", "left_outer", "inner"):
@@ -536,7 +369,7 @@ def stream_join_versioned(
     )
     return _stateful_join(
         _with_null_subkey(union, how, grouped=False),
-        how, grouped=False, ttl_ms=ttl_ms, engine=engine,
+        how, grouped=False, ttl_ms=ttl_ms,
     )
 
 

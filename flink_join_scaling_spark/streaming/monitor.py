@@ -11,7 +11,8 @@ in rather than bolted on:
 * per-batch metrics — ``df.observe`` attaches aggregate observations
   evaluated inline with the query (no extra pass), surfaced through a
   ``StreamingQueryListener``;
-* watermark / throughput — already in every progress event.
+* watermark / throughput / phase durations / state-store sizes —
+  already in every progress event.
 
 :class:`StreamMetrics` packages both: observed row counts + event-time
 bounds per micro-batch, and the engine-side progress log the
@@ -46,10 +47,21 @@ def observed(
 
 @dataclass
 class BatchMetric:
+    """One micro-batch's progress. The ``state_*`` fields sum the
+    query's stateful operators (0 without one): rows held after the
+    batch, rows it wrote, commit time and memory of the state store.
+    A state operator evaluated twice in one batch (a ``foreachBatch``
+    sink that reads its frame twice) counts its rows twice."""
+
     batch_id: int
     num_input_rows: int
     watermark: str | None
     observed: dict[str, Any]
+    duration_ms: dict[str, int] = field(default_factory=dict)
+    state_rows_total: int = 0
+    state_rows_updated: int = 0
+    state_commit_ms: int = 0
+    state_memory_bytes: int = 0
 
 
 class StreamMetrics(StreamingQueryListener):
@@ -84,12 +96,18 @@ class StreamMetrics(StreamingQueryListener):
         p = event.progress
         obs_row = p.observedMetrics.get(self.observation_name)
         obs = obs_row.asDict() if obs_row is not None else {}
+        ops = p.stateOperators
         self.batches.append(
             BatchMetric(
                 batch_id=p.batchId,
                 num_input_rows=p.numInputRows,
                 watermark=p.eventTime.get("watermark"),
                 observed=obs,
+                duration_ms=dict(p.durationMs),
+                state_rows_total=sum(o.numRowsTotal for o in ops),
+                state_rows_updated=sum(o.numRowsUpdated for o in ops),
+                state_commit_ms=sum(o.commitTimeMs for o in ops),
+                state_memory_bytes=sum(o.memoryUsedBytes for o in ops),
             )
         )
 

@@ -10,34 +10,48 @@ transactional table format (with Delta/Iceberg you'd issue MERGE INTO
 instead; same shape, one merge per micro-batch).
 
 Layout: one parquet snapshot directory per micro-batch generation,
-written atomically (tmp dir + rename), with a `_LATEST` pointer file.
-Readers always see a complete snapshot. State needed per merge = old
-snapshot ⋈ batch — a key-partitioned merge, shuffle-bounded by the
-snapshot size, executed by Spark (no driver-side rows).
+``gen-<batch_id>``, with a ``_LATEST`` pointer file flipped after the
+write. Readers always see a complete snapshot. Each merge reads the
+old snapshot and the batch once, in one key-partitioned window
+executed by Spark (no driver-side rows), and keeps only the current
+and the previous generation on disk.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
-def _latest_path(root: str) -> str | None:
+def _latest_gen(root: str) -> str | None:
     ptr = os.path.join(root, "_LATEST")
     if not os.path.exists(ptr):
         return None
     with open(ptr) as f:
-        gen = f.read().strip()
-    return os.path.join(root, gen) if gen else None
+        return f.read().strip() or None
 
 
 def read_upsert_snapshot(spark: SparkSession, root: str) -> DataFrame | None:
     """Read the current converged table (or None before first commit)."""
-    path = _latest_path(root)
-    return spark.read.parquet(path) if path else None
+    gen = _latest_gen(root)
+    return spark.read.parquet(os.path.join(root, gen)) if gen else None
+
+
+def _flip_latest(root: str, gen: str, prev: str | None) -> None:
+    """Point ``_LATEST`` at ``gen`` (single small-file rewrite), then
+    delete every generation but ``gen`` and ``prev``: the previous one
+    stays for readers that resolved ``_LATEST`` just before the flip."""
+    tmp = os.path.join(root, "_LATEST.tmp")
+    with open(tmp, "w") as f:
+        f.write(gen)
+    os.replace(tmp, os.path.join(root, "_LATEST"))
+    for old in os.listdir(root):
+        if old.startswith("gen-") and old not in (gen, prev):
+            shutil.rmtree(os.path.join(root, old), ignore_errors=True)
 
 
 def upsert_sink(
@@ -46,9 +60,25 @@ def upsert_sink(
     ts_col: str | None = None,
 ):
     """Build a ``foreachBatch`` function that merges each micro-batch
-    into a keyed parquet snapshot: new keys inserted, existing keys
-    replaced (or replaced only by newer ``ts_col`` when given —
-    last-writer-wins against out-of-order redelivery).
+    into a keyed parquet snapshot.
+
+    Without ``ts_col``, a key's rows in the batch replace the key's
+    whole old row set, and keys the batch does not touch keep theirs.
+    This is the changelog contract of :func:`stream_join_versioned`,
+    which emits a touched key's full current join result (one row per
+    pairing) every time, so its changelog upserted on ``"k"`` converges
+    to the batch join. The join's null-keyed rows are emitted per
+    (side, id), not as one key's result; drop or re-key them before an
+    upsert on ``"k"``.
+
+    With ``ts_col``, the sink keeps one row per key, the newest by
+    ``ts_col`` over the old row and the batch's rows, the old row
+    winning a tie (last-writer-wins against out-of-order redelivery).
+
+    The sink is idempotent by batch id: a batch whose generation
+    ``_LATEST`` already names is skipped, and a batch that crashed
+    between its write and the pointer flip rewrites its generation.
+    So ``root`` belongs to one query and its checkpoint.
 
     Usage::
 
@@ -59,48 +89,21 @@ def upsert_sink(
     keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # within-batch: keep one row per key (latest by ts if given)
-        if ts_col is not None:
-            w = Window.partitionBy(*keys).orderBy(F.desc(ts_col))
-            batch_df = (
-                batch_df.withColumn("__rn", F.row_number().over(w))
-                .where(F.col("__rn") == 1)
-                .drop("__rn")
-            )
-        else:
-            batch_df = batch_df.dropDuplicates(keys)
-        old = read_upsert_snapshot(spark, root)
-        if old is None:
-            merged = batch_df
-        elif ts_col is not None:
-            # keep an old row unless the batch brings a strictly newer
-            # version of its key; admit a batch row unless an
-            # at-least-as-new old row exists
-            newer = batch_df.alias("n")
-            cond = [F.col(f"o.{k}") == F.col(f"n.{k}") for k in keys]
-            keep_old = old.alias("o").join(
-                newer,
-                on=[*cond, F.col(f"n.{ts_col}") > F.col(f"o.{ts_col}")],
-                how="left_anti",
-            )
-            fresh_new = newer.join(
-                old.alias("o"),
-                on=[*cond, F.col(f"o.{ts_col}") >= F.col(f"n.{ts_col}")],
-                how="left_anti",
-            )
-            merged = keep_old.unionByName(fresh_new)
-        else:
-            merged = old.join(batch_df, on=keys, how="left_anti").unionByName(
-                batch_df
-            )
         gen = f"gen-{batch_id:09d}"
-        out = os.path.join(root, gen)
-        merged.write.mode("overwrite").parquet(out)
-        # atomic-enough pointer flip (single small file rewrite)
-        tmp = os.path.join(root, "_LATEST.tmp")
-        with open(tmp, "w") as f:
-            f.write(gen)
-        os.replace(tmp, os.path.join(root, "_LATEST"))
+        prev = _latest_gen(root)
+        if prev == gen:
+            return  # replay of a batch that already committed
+        rows = batch_df.withColumn("__new", F.lit(1))
+        if prev is not None:
+            old = batch_df.sparkSession.read.parquet(os.path.join(root, prev))
+            rows = old.withColumn("__new", F.lit(0)).unionByName(rows)
+        w = Window.partitionBy(*keys)
+        if ts_col is None:
+            keep = F.col("__new") == F.max("__new").over(w)
+        else:
+            keep = F.row_number().over(w.orderBy(F.desc(ts_col), "__new")) == 1
+        merged = rows.withColumn("__keep", keep).where("__keep").drop("__new", "__keep")
+        merged.write.mode("overwrite").parquet(os.path.join(root, gen))
+        _flip_latest(root, gen, prev)
 
     return merge

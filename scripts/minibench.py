@@ -6,7 +6,7 @@ queries — the optimization round's A/B tool. Usage:
     python scripts/minibench.py [-r REPS] q_name [q_name ...]
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-SPARK_GRAFT_CPUS (default 32).
+SPARK_GRAFT_CPUS (default: the CPUs this process may run on).
 """
 
 from __future__ import annotations
@@ -30,7 +30,7 @@ def main() -> None:
     ap.add_argument("names", nargs="+")
     args = ap.parse_args()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     spark = get_spark(
         app_name="fjss-minibench",
         cpus=cpus,

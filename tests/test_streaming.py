@@ -131,17 +131,8 @@ def test_stream_dedup_within_watermark_in_order(streaming_spark, tmp_path):
     assert got == expected
 
 
-from flink_join_scaling_spark.streaming.joins import mapstate_available
-
-#: both state engines where the runtime supports them; in this
-#: sandbox (no protobuf) only the GroupState fallback runs, and a
-#: dedicated test asserts the auto-fallback + loud mapstate refusal
-_ENGINES = ["groupstate"] + (["mapstate"] if mapstate_available() else [])
-
-
-@pytest.mark.parametrize("engine", _ENGINES)
 @pytest.mark.parametrize("how", ["full_outer", "left_outer", "inner"])
-def test_stream_join_matches_batch(streaming_spark, tmp_path, how, engine):
+def test_stream_join_matches_batch(streaming_spark, tmp_path, how):
     spark = streaming_spark
     a = spark.createDataFrame(_gen_a(6, 3), A_SCHEMA)
     b = spark.createDataFrame(_gen_b(10, 3, ida_max=9), B_SCHEMA)
@@ -149,7 +140,7 @@ def test_stream_join_matches_batch(streaming_spark, tmp_path, how, engine):
     sa = chunked_parquet_stream(spark, a, str(tmp_path / "a"), n_chunks=3)
     sb = chunked_parquet_stream(spark, b, str(tmp_path / "b"), n_chunks=3)
     out = stream_join_versioned(
-        sa, sb, "id", "ida", "id", "id", "ts", "ts", how=how, engine=engine
+        sa, sb, "id", "ida", "id", "id", "ts", "ts", how=how
     )
     em = collect_emissions(out)
     got = converged(em, ["k"])
@@ -171,44 +162,6 @@ def test_stream_join_matches_batch(streaming_spark, tmp_path, how, engine):
     exp_pairs = {(r.x_tag, r.y_tag) for r in batch.collect()}
     assert got_pairs == exp_pairs
     assert len(em) >= len(got)  # changelog re-emission property
-
-
-def test_engine_probe_and_routing(streaming_spark):
-    """The engine feature-probe must (a) agree with the actual
-    protobuf availability, (b) resolve engine='auto' to the supported
-    path, and (c) refuse engine='mapstate' LOUDLY where the wire
-    protocol is absent — never silently fall back when a caller
-    forced a path."""
-    from flink_join_scaling_spark.streaming.joins import _resolve_engine
-
-    try:
-        import pyspark.sql.streaming.proto.StateMessage_pb2  # noqa: F401
-
-        has_proto = True
-    except ImportError:
-        has_proto = False
-    assert mapstate_available() == has_proto
-    expected = "mapstate" if has_proto else "groupstate"
-    assert _resolve_engine("auto") == expected
-    assert _resolve_engine("groupstate") == "groupstate"
-    if not has_proto:
-        with pytest.raises(RuntimeError, match="protobuf"):
-            _resolve_engine("mapstate")
-    with pytest.raises(ValueError):
-        _resolve_engine("rocksdb")
-    # the public entry points default to the engine this repo's test
-    # suite actually exercises — 'auto' is an explicit opt-in, so a
-    # protobuf-bearing deployment can't silently switch engines (and
-    # TTL semantics: per-entry vs whole-key) for existing callers
-    import inspect
-
-    from flink_join_scaling_spark.streaming.joins import (
-        stream_join_versioned,
-        stream_join_versioned_grouped,
-    )
-
-    for fn in (stream_join_versioned, stream_join_versioned_grouped):
-        assert inspect.signature(fn).parameters["engine"].default == "groupstate"
 
 
 def test_stream_join_typed_structs_end_to_end(streaming_spark, tmp_path):
@@ -244,9 +197,8 @@ def test_stream_join_typed_structs_end_to_end(streaming_spark, tmp_path):
     assert got_pairs == exp_pairs
 
 
-@pytest.mark.parametrize("engine", _ENGINES)
 @pytest.mark.parametrize("how", ["full_outer_seq", "left_outer_seq"])
-def test_stream_join_grouped_matches_batch(streaming_spark, tmp_path, how, engine):
+def test_stream_join_grouped_matches_batch(streaming_spark, tmp_path, how):
     """O8/O9 streaming: converged grouped changelog equals the batch
     Seq-variant joins (element sets per key, both sides)."""
     from flink_join_scaling_spark.operators.joins import (
@@ -262,7 +214,7 @@ def test_stream_join_grouped_matches_batch(streaming_spark, tmp_path, how, engin
     sb = chunked_parquet_stream(spark, b, str(tmp_path / "b"), n_chunks=3)
     em = collect_emissions(
         stream_join_versioned_grouped(
-            sa, sb, "id", "ida", "id", "id", "ts", "ts", how=how, engine=engine
+            sa, sb, "id", "ida", "id", "id", "ts", "ts", how=how
         )
     )
     def tags(arr_json: str) -> tuple:
@@ -827,3 +779,23 @@ def test_stream_scd2_dropped_count_dedupes_within_batch(streaming_spark, tmp_pat
     final = converged(em, ["k"]).iloc[0]
     assert sum(int(n) for n in final["n_versions"]) == 2
     assert int(final["n_dropped"]) == 1
+
+
+def test_fold_latest_last_writer_wins():
+    """The per-key fold keeps the max (ts, payload) per (side, id),
+    reports whether any entry changed, and ranks a null ts lowest."""
+    from flink_join_scaling_spark.streaming.joins import _fold_latest
+
+    xs, ys = {"1": [5, "b"]}, {}
+    batch = pd.DataFrame(
+        {"side": [0, 0, 1, 1], "id": ["1", "1", "7", "7"], "ts": [5, 4, 3, 3],
+         "payload": ["a", "z", "p", "q"]}
+    )
+    assert not _fold_latest(xs, dict(), iter([batch.iloc[:2]]))  # stale for xs
+    assert _fold_latest(xs, ys, iter([batch.iloc[:1], batch.iloc[1:]]))
+    assert xs == {"1": [5, "b"]} and ys == {"7": [3, "q"]}
+    nulls = pd.DataFrame(
+        {"side": [0, 0], "id": ["2", "3"], "ts": [float("nan"), 1.0], "payload": ["n", "m"]}
+    )
+    assert _fold_latest(xs, ys, iter([nulls]))
+    assert xs["2"] == [-(1 << 63), "n"] and xs["3"] == [1, "m"]
