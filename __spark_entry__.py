@@ -1,9 +1,10 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Query-surface contract of the PySpark engine.
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs
-each ``queries()[name]`` at sf=0.01 and compares it against the
-matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+``entry(spark)`` is a smoke check (rows > 0). Each ``queries()[name]``
+runs at sf=0.01 and is compared against the matching
+``oracle_sql()[name]`` run by DuckDB (row count + schema +
+order-insensitive value hash). ``queries()`` lists every registered
+query in registration order.
 
 The actual engine lives in ``flink_join_scaling_spark``; the declared
 query surface is the registry in ``flink_join_scaling_spark.plans``.
@@ -29,7 +30,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2."""
+    """One entry per implemented operator from SURVEY.md §2, in
+    registration order."""
     return plans.query_fns()
 
 

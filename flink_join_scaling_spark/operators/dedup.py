@@ -1732,8 +1732,7 @@ def embedding_dedup_pairs_ivf(
     )
     id_t = df.schema[id_col].dataType.simpleString()
     # ``emit_e6``: score/threshold on e6-BIGINT quantized cosines
-    # (CAST(round(cos * 1e6) AS BIGINT), half-away — the recipe every
-    # retired FLOAT_BOUNDARY_SENSITIVE cohort adopted). An integer
+    # (CAST(round(cos * 1e6) AS BIGINT), half-away). An integer
     # compare only disagrees with the oracle at an exact .5e-6 midpoint
     # of the UNROUNDED value; the legacy round-6 DOUBLE compare also
     # carries a 1-ulp risk at every threshold-adjacent value because

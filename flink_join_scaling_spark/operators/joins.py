@@ -48,7 +48,6 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -226,56 +225,3 @@ def join_inner(
     dx = dedup_latest(x, x_id, x_ts)
     dy = dedup_latest(y, y_id, y_ts)
     return _joined(dx, dy, x_key, y_key, "inner", x_prefix, y_prefix, broadcast_right)
-
-
-def join_full_outer_cogroup(
-    x: DataFrame,
-    y: DataFrame,
-    x_key: str,
-    y_key: str,
-    x_id: str,
-    y_id: str,
-    x_ts: str,
-    y_ts: str,
-    x_prefix: str = "x_",
-    y_prefix: str = "y_",
-) -> DataFrame:
-    """O6 via a true cogroup (``df.groupby.cogroup.applyInPandas``) —
-    the structural twin of the reference's ``CoGroupFunction``
-    (``cogroupFunctions.scala:7-30``): per key, dedup both sides then
-    emit the null-padded cross product.
-
-    Exists as the extension point for per-key logic plain SQL can't
-    express; for this expressible case, prefer :func:`join_full_outer`
-    (whole-stage codegen, no Python boundary). Arrow-batched either way.
-    """
-    x2, y2, x_map, y_map = _disambiguate(x, y, x_prefix, y_prefix)
-    xkc, ykc = x_map[x_key], y_map[y_key]
-    xid, yid = x_map[x_id], y_map[y_id]
-    xts, yts = x_map[x_ts], y_map[y_ts]
-    x_cols, y_cols = list(x2.columns), list(y2.columns)
-
-    out_schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in x2.schema.fields]
-        + [f"`{f.name}` {f.dataType.simpleString()}" for f in y2.schema.fields]
-    )
-
-    def cogroup(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if len(left):
-            left = left.sort_values(xts, kind="stable").groupby(xid, as_index=False).tail(1)
-        if len(right):
-            right = right.sort_values(yts, kind="stable").groupby(yid, as_index=False).tail(1)
-        if len(left) and len(right):
-            return left.merge(right, how="cross")
-        pad = left if len(left) else right
-        missing = y_cols if len(left) else x_cols
-        pad = pad.copy()
-        for c in missing:
-            pad[c] = None
-        return pad[x_cols + y_cols]
-
-    return (
-        x2.groupby(xkc)
-        .cogroup(y2.groupby(ykc))
-        .applyInPandas(cogroup, schema=out_schema)
-    )

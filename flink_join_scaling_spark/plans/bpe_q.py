@@ -80,7 +80,6 @@ def _train_ctes(k: int) -> str:
     SELECT merge_rank, a, b, a || b AS merged, cnt
     FROM ({" UNION ALL ".join(f"SELECT * FROM b{r}" for r in range(1, _BPE_K + 1))})
     """,
-    tags=("llmdata", "text", "iterative"),
 )
 def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The learned merge table: rank, pair, merged token, and the
@@ -127,7 +126,6 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents d LEFT JOIN dcnt c ON d.doc_id = c.doc_id
     """,
     headline=True,
-    tags=("llmdata", "text", "iterative"),
 )
 def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train-then-encode end to end: per-document pre-token and
@@ -188,7 +186,6 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY d.source
     """,
     headline=True,
-    tags=("llmdata", "text", "iterative"),
 )
 def q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TRAINED-tokenizer fertility by source: BPE tokens per pre-token

@@ -18,7 +18,8 @@ domain [0, 1e6] because the score is a convex combination in [0,1]).
 
 The Spark side derives quartile MEMBERSHIP without any window: one
 domain-bounded value histogram (the e6 score domain holds ≤ 1,000,001
-distinct values at ANY corpus size) locates the exact cutoff values
+distinct values at ANY corpus size, so the driver collects at most
+1,000,001 pyspark ``Row`` objects) locates the exact cutoff values
 and tie splits, and labeling is then a map-side filter against four
 broadcast literals. The earlier global
 ``ntile(4)`` window ranked the ENTIRE corpus on one partition (Spark
@@ -131,9 +132,13 @@ def _quartile_conditions(base: DataFrame):
     One bounded histogram job replaces the single-partition global
     sort: a full value histogram on ``__qe6`` — the raw quality score
     is a convex combination in [0,1], so the e6 domain holds at most
-    1,000,001 distinct values and the collect is ≤ ~16 MB at ANY
-    corpus size (bounded by the VALUE DOMAIN, never by rows — the same
-    boundedness class as connected_components' gated 1M-edge collect).
+    1,000,001 distinct values and the collect is at most 1,000,001
+    pyspark ``Row`` objects at ANY corpus size (bounded by the VALUE
+    DOMAIN, never by corpus rows — the same boundedness class as
+    connected_components' gated 1M-edge collect). Driver memory is
+    sized by those Row objects, about 330 bytes each in CPython
+    (~330 MB at the bound, plus the count dict), not by the 16 bytes
+    of each (value, count) pair.
     r18 folded the former two-level coarse→fine walk (≤101 + ≤2·10⁴
     rows over two jobs) into this single aggregation: one map-side-
     combined pass and ONE driver round-trip instead of two, saving a
@@ -242,7 +247,6 @@ def _weight_cols(w: list[float]) -> list:
            {", ".join(f"CAST(round(w.w{j} * 1000000.0) AS BIGINT) AS w{j}_e6" for j in range(6))}
     FROM w{_LR_ITERS} w, nn
     """,
-    tags=("llmdata", "classifier", "iterative"),
 )
 def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train the quality classifier and emit the fitted model: weight
@@ -272,7 +276,6 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) t WHERE t.z >= 0
     """,
     headline=True,
-    tags=("llmdata", "classifier", "iterative"),
 )
 def q_quality_classifier_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Model-filtered corpus: every document the trained classifier

@@ -46,7 +46,6 @@ from flink_join_scaling_spark.sources.catalog import load_table
     ORDER BY df DESC, token ASC
     LIMIT 100
     """,
-    tags=("corpus", "text"),
 )
 def q_vocab_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vocabulary statistics: term frequency + document frequency per
@@ -79,7 +78,6 @@ def q_vocab_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY df DESC, shingle ASC
     LIMIT 100
     """,
-    tags=("corpus", "text"),
 )
 def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Phrase (3-gram shingle) inverted index for mid-frequency
@@ -134,7 +132,6 @@ _BUCKET_DUCK = (
     FROM h
     WHERE {_BUCKET_DUCK} % 20 = 0
     """,
-    tags=("corpus", "sampling"),
 )
 def q_sample_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic ~5% sample: md5(doc_id) bucket ≡ 0 (mod 20).
@@ -162,7 +159,6 @@ def q_sample_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents d JOIN qraw q ON q.doc_id = d.doc_id
     WHERE q.quality_raw >= 0.55 AND d.n_chars BETWEEN 100 AND 5000
     """,
-    tags=("corpus", "quality"),
 )
 def q_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The selection stage of a corpus pipeline: quality ≥ 0.55 and
@@ -203,7 +199,6 @@ def q_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY d.source
     )
     """,
-    tags=("corpus", "quality"),
 )
 def q_source_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source corpus profile (doc count, volume, mean quality,
@@ -260,7 +255,6 @@ def q_source_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                       ',' ORDER BY pos) AS centroid_csv
     FROM dims GROUP BY label
     """,
-    tags=("corpus", "embeddings"),
 )
 def q_embed_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label embedding centroid (the training step of IVF coarse
@@ -312,7 +306,6 @@ _PACK_BUDGET = 1024  # tokens per training sequence
     FROM cum
     GROUP BY source, bin_idx
     """.replace("{norm}", "regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')"),
-    tags=("corpus", "packing"),
 )
 def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Greedy sequence packing for training: within each source shard,
@@ -358,7 +351,6 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE {_BUCKET_DUCK} % 100 <
           (CASE WHEN lang = 'en' THEN 50 ELSE 10 END)
     """,
-    tags=("corpus", "sampling"),
 )
 def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stratified deterministic sampling: per-language keep rates
@@ -397,7 +389,6 @@ def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS rep_bigram
     FROM big
     """,
-    tags=("corpus", "quality"),
 )
 def q_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Within-document repetition signals (the Gopher-style quality
@@ -443,7 +434,6 @@ def q_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM tf t JOIN df d USING (token) CROSS JOIN n
     ) WHERE rn <= 5
     """,
-    tags=("corpus", "text", "retrieval"),
 )
 def q_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-5 most distinctive tokens per document by smoothed TF-IDF
@@ -533,7 +523,6 @@ def _bm25_term_sql(tok: str) -> str:
         FROM tfs t JOIN dl l USING (doc_id) CROSS JOIN c
     ) WHERE rank <= 20
     """,
-    tags=("corpus", "text", "retrieval"),
 )
 def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 top-20 retrieval for a fixed query ("join stream vector"):
@@ -645,7 +634,6 @@ def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
                   - n_tokens * ln(t)) / n_tokens, 6) AS lm_logprob
     FROM per, tot
     """,
-    tags=("corpus", "text"),
 )
 def q_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style unigram language-model quality score: the corpus IS
@@ -755,7 +743,6 @@ _LM2_MIN_COUNT = 2
                  / CAST(n_bigrams AS DOUBLE), 6) AS lm2_logprob
     FROM per
     """,
-    tags=("corpus", "text"),
 )
 def q_lm_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interpolated bigram language-model score — the next rung above
@@ -913,7 +900,6 @@ def _lm2h_bucket_duck(sql_expr: str, width: int) -> str:
     FROM per
     """,
     headline=True,
-    tags=("corpus", "text"),
 )
 def q_lm_bigram_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hashed-feature interpolated bigram LM — q_lm_bigram's scoring
@@ -1068,7 +1054,6 @@ def q_lm_bigram_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS weight
     FROM per_source, tot
     """,
-    tags=("corpus", "mixture"),
 )
 def q_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mixture reweighting (DoReMi-lite): per-source sampling weight
@@ -1156,7 +1141,6 @@ def q_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1, 2
     """,
     headline=True,
-    tags=("corpus", "pipeline"),
 )
 def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composed curation pipeline, end to end in ONE plan: quality
@@ -1275,7 +1259,6 @@ def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum(doc_id) AS BIGINT) AS id_sum
     FROM j GROUP BY 1
     """,
-    tags=("corpus", "cdc"),
 )
 def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus snapshot diff (the CDC view of a re-crawled /
@@ -1357,7 +1340,6 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY lift_e6 DESC, bigram ASC
     LIMIT 20
     """,
-    tags=("corpus", "text"),
 )
 def q_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bigram collocation mining: top-20 adjacent token pairs by lift
@@ -1449,7 +1431,6 @@ def q_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN sizes sa ON src_a = sa.source
     JOIN sizes sb ON src_b = sb.source
     """,
-    tags=("corpus", "dedup"),
 )
 def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-source duplication diagnostic: shingle-set Jaccard between
@@ -1537,7 +1518,6 @@ def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNION ALL
     SELECT source, n_exact, TRUE AS within_tol FROM allsrc
     """,
-    tags=("corpus", "sketch"),
 )
 def q_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mergeable cardinality sketch rollup (Apache DataSketches HLL):
@@ -1601,7 +1581,6 @@ _HH_THETA = 200  # report tokens with count > total/200
     WHERE {_HH_THETA} * n_occurrences > n
     ORDER BY n_occurrences DESC, token ASC
     """.format(toks=_TOKS_CTE),
-    tags=("corpus", "sketch", "scale"),
 )
 def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact heavy hitters (tokens with count > total/200) WITHOUT a
@@ -1675,7 +1654,6 @@ def _cms_oracle() -> str:
 @query(
     "q_cms_freq",
     oracle=_cms_oracle(),
-    tags=("corpus", "sketch", "scale"),
 )
 def q_cms_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-Min point-frequency estimates, FULLY oracle-checked: the
@@ -1751,7 +1729,6 @@ _DRIFT_BINS = 6  # n_chars // 100, capped → bins 0..5
     GROUP BY s.source
     ORDER BY s.source
     """,
-    tags=("corpus", "quality", "drift"),
 )
 def q_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Population-stability index per source vs the whole corpus, over
@@ -1868,7 +1845,6 @@ _RRF_TERMS = ("join", "stream", "vector")  # shared with q_bm25's query
     ORDER BY round(rrf, 6) DESC, doc_id ASC
     LIMIT 20
     """.format(toks=_TOKS_CTE, qual=_quality_cte()),
-    tags=("corpus", "retrieval"),
 )
 def q_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reciprocal rank fusion of two retrieval signals — a lexical
@@ -1949,7 +1925,6 @@ _N_SHARDS = 16
            min(doc_id) AS min_doc, max(doc_id) AS max_doc
     FROM s GROUP BY shard
     """,
-    tags=("corpus", "sharding"),
 )
 def q_shard_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic training-shard manifest: every document lands in
@@ -2009,7 +1984,6 @@ def q_shard_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
            max(lm_logprob) AS max_logprob
     FROM b GROUP BY lang, bucket
     """,
-    tags=("corpus", "text", "curation"),
 )
 def q_ppl_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style perplexity bucketing: per language, documents are
@@ -2107,7 +2081,6 @@ def q_ppl_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
                       * 1000000) AS BIGINT) AS upsample_e6
     FROM q, s
     """,
-    tags=("corpus", "mixture"),
 )
 def q_mixture_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-scaled source mixture (the multilingual-sampling
@@ -2187,7 +2160,6 @@ _SOURCE_CAP = 50
         FROM documents d JOIN qraw q ON q.doc_id = d.doc_id
     ) WHERE rank_in_source <= {_SOURCE_CAP}
     """,
-    tags=("corpus", "sampling"),
 )
 def q_source_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source document cap: keep each source's top-N documents by
@@ -2201,9 +2173,8 @@ def q_source_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     IEEE arithmetic in both engines — no rounding in the order key);
     the exposed score is the e4 integer quantization, per the
     engine-stable round discipline. The decimal round(…,4) display
-    form hits a cross-engine midpoint at sf0.001 (doc 234) — exactly
-    the flake class the FLOAT_BOUNDARY manifest exists for, avoided
-    here by construction.
+    form hits a cross-engine midpoint at sf0.001 (doc 234); the
+    integer form avoids that by construction.
 
     Scale shape: the rank<=N filter over the source-partitioned window
     compiles to WindowGroupLimit (asserted in tests/test_plans.py) —
@@ -2259,7 +2230,6 @@ _LB_CAP = 15
                 AS BIGINT) AS pad_overhead_e6
     FROM b GROUP BY 1
     """,
-    tags=("corpus", "batching"),
 )
 def q_length_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Length-bucketed batching manifest: documents grouped into

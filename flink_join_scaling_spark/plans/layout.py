@@ -153,7 +153,6 @@ def _bloom_oracle() -> str:
     "q_join_bloom_reduced",
     headline=True,
     oracle=_bloom_oracle(),
-    tags=("layout", "join", "scale"),
 )
 def q_join_bloom_reduced(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-join reduction via an engine-independent Bloom-style
@@ -284,7 +283,6 @@ _NORM_DUCK = r"regexp_replace(lower(trim(text)), '\s+', ' ', 'g')"
     GROUP BY split
     ORDER BY split
     """,
-    tags=("layout", "llmdata", "sampling"),
 )
 def q_split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-aware train/validation split: assignment is a
@@ -372,7 +370,6 @@ def _z_value_duck(x: str, y: str) -> str:
     GROUP BY file_id
     ORDER BY file_id
     """,
-    tags=("layout", "scale"),
 )
 def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order (Morton) layout keys over events: interleave 8 bits of

@@ -84,7 +84,6 @@ def _dot_sql(a: str, b: str) -> str:
     FROM norm
     """,
     headline=True,
-    tags=("llmdata", "text"),
 )
 def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -111,7 +110,6 @@ def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(len(string_split({_NORM}, ' ')) AS BIGINT) AS n_tokens_ws
     FROM documents
     """,
-    tags=("llmdata", "text"),
 )
 def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -147,7 +145,7 @@ def _lang_id_oracle() -> str:
     """
 
 
-@query("q_lang_id", oracle=_lang_id_oracle(), tags=("llmdata", "text"))
+@query("q_lang_id", oracle=_lang_id_oracle())
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """n-gram/stopword-marker language ID (deterministic heuristic).
 
@@ -222,7 +220,6 @@ def _quality_cte() -> str:
     oracle=f"""WITH {_quality_cte()}
     SELECT doc_id, CAST(round(quality_raw * 10000) AS BIGINT) AS quality_e4
     FROM qraw""",
-    tags=("llmdata", "text"),
 )
 def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heuristic quality score per document, exposed as an e4 integer
@@ -305,7 +302,6 @@ from flink_join_scaling_spark.operators.classifier import (  # noqa: E402
     FROM rules
     """,
     headline=True,
-    tags=("llmdata", "text", "quality"),
 )
 def q_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher quality-rule battery (Rae et al. 2021 §A1.1, the
@@ -352,7 +348,6 @@ def q_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM words
     GROUP BY doc_id
     """,
-    tags=("llmdata", "text"),
 )
 def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Position-weighted rolling document fingerprint (mod 1e9+7),
@@ -388,7 +383,6 @@ _CHUNK, _STRIDE = 64, 48
     WHERE least({_CHUNK}, len(ws) - s) > 0
     """,
     headline=True,
-    tags=("llmdata", "text"),
 )
 def q_text_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Overlapping token-window chunking (64-token windows, stride 48)
@@ -412,7 +406,6 @@ def q_text_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1
     """,
     headline=True,
-    tags=("llmdata", "dedup"),
 )
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -428,7 +421,6 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT doc_id, lang, source, n_chars
     FROM h WHERE doc_id IN (SELECT keeper FROM keep)
     """,
-    tags=("llmdata", "dedup"),
 )
 def q_dedup_exact_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The exactly-deduplicated corpus: one survivor (min id) per
@@ -508,7 +500,7 @@ def _minhash_oracle() -> str:
     return f"WITH {_minhash_ctes()} SELECT id_a, id_b, jaccard FROM mh_pairs"
 
 
-@query("q_dedup_minhash", oracle=_minhash_oracle(), headline=True, tags=("llmdata", "dedup"))
+@query("q_dedup_minhash", oracle=_minhash_oracle(), headline=True)
 def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup pairs (md5-family hashes, banded candidate
     join, exact Jaccard verify ≥ 0.5)."""
@@ -526,7 +518,6 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
            TRUE AS ml_recall_ok
     FROM mh_pairs
     """,
-    tags=("llmdata", "dedup", "mllib"),
 )
 def q_dedup_minhash_ml(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MLlib MinHashLSH variant, SELF-ATTESTING: the library's hash
@@ -577,7 +568,6 @@ _EDGES_REACH_CTES = """
     {_EDGES_REACH_CTES}
     SELECT node AS doc_id, component_id FROM comp
     """,
-    tags=("llmdata", "dedup"),
 )
 def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-group formation: connected components over the MinHash
@@ -618,7 +608,6 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM ranked r JOIN stats s ON s.component_id = r.component_id
     WHERE r.rn = 1
     """,
-    tags=("llmdata", "dedup"),
 )
 def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical-representative selection: per duplicate group, keep
@@ -664,7 +653,6 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents d
     WHERE d.doc_id NOT IN (SELECT node FROM losers)
     """,
-    tags=("llmdata", "dedup"),
 )
 def q_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The deduplicated corpus itself — every document except the
@@ -717,7 +705,7 @@ def _simhash_oracle() -> str:
     """
 
 
-@query("q_dedup_simhash", oracle=_simhash_oracle(), headline=True, tags=("llmdata", "dedup"))
+@query("q_dedup_simhash", oracle=_simhash_oracle(), headline=True)
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs: 32-bit sign projection, byte-band
     candidates, hamming ≤ 3."""
@@ -802,7 +790,6 @@ _WINNOW_CTES = f"""
     SELECT id_a, id_b, n_shared FROM wpairs
     """,
     headline=True,
-    tags=("llmdata", "dedup"),
 )
 def q_dedup_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing near-dup pairs (Schleimer et al. 2003, the MOSS
@@ -851,7 +838,6 @@ def q_dedup_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN sizes sb ON id_b = sb.doc_id
     WHERE round(n_inter / (sa.n + sb.n - n_inter), 6) >= 0.5
     """,
-    tags=("llmdata", "dedup"),
 )
 def q_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact word-3-gram Jaccard near-dup pairs ≥ 0.5 with a stop-
@@ -885,7 +871,6 @@ def q_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE round(n_inter / least(sa.n, sb.n), 6) >= 0.8
     """,
     headline=True,
-    tags=("llmdata", "dedup"),
 )
 def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shingle CONTAINMENT pairs >= 0.8: n_inter / min(|A|, |B|) — the
@@ -917,7 +902,6 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT id_a, id_b, cosine_e6 FROM pairs WHERE cosine_e6 >= 450000
     """,
-    tags=("llmdata", "dedup"),
 )
 def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs ≥ 0.45 (exact pair join
@@ -960,7 +944,6 @@ def _embedding_ivf_oracle() -> str:
     "q_dedup_embedding_ivf",
     oracle=_embedding_ivf_oracle(),
     headline=True,
-    tags=("llmdata", "dedup"),
 )
 def q_dedup_embedding_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-bucketed embedding near-dup pairs ≥ 0.45 — the scale path
@@ -996,7 +979,6 @@ def q_dedup_embedding_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents d
     WHERE d.doc_id NOT IN (SELECT node FROM losers)
     """,
-    tags=("llmdata", "dedup"),
 )
 def q_dedup_winnow_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The winnow-deduplicated corpus: connected components over the
@@ -1047,14 +1029,14 @@ _TOPK_ORACLE = f"""
     """
 
 
-@query("q_sim_topk", oracle=_TOPK_ORACLE, headline=True, tags=("llmdata", "similarity"))
+@query("q_sim_topk", oracle=_TOPK_ORACLE, headline=True)
 def q_sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-5 for query vectors vec_id < 10."""
     e = load_table(spark, sf_dir, "embeddings")
     return sim.cosine_topk(e, e.where(F.col("vec_id") < 10), k=5)
 
 
-@query("q_sim_topk_pandas", oracle=_TOPK_ORACLE, tags=("llmdata", "similarity", "pandas"))
+@query("q_sim_topk_pandas", oracle=_TOPK_ORACLE)
 def q_sim_topk_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same top-k through the Arrow/NumPy mapInPandas path — identical
     results by construction (round-6 + deterministic tiebreak), checked
@@ -1106,7 +1088,6 @@ def _ann_oracle() -> str:
     "q_sim_ann_lsh",
     oracle=_ann_oracle(),
     headline=True,
-    tags=("llmdata", "similarity"),
 )
 def q_sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH-bucketed approximate top-5 (sign-random-projection, 4
@@ -1149,7 +1130,7 @@ def _ivf_oracle() -> str:
     """
 
 
-@query("q_sim_ann_ivf", oracle=_ivf_oracle(), headline=True, tags=("llmdata", "similarity"))
+@query("q_sim_ann_ivf", oracle=_ivf_oracle(), headline=True)
 def q_sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-bucketed approximate top-5: corpus quantized to its nearest
     of 8 deterministic seed cells, queries probe their 2 nearest cells
@@ -1196,7 +1177,6 @@ def _recall_attest(exact: DataFrame, approx: DataFrame, bound: float = 0.5) -> D
 @query(
     "q_sim_ann_ivf_trained",
     oracle=_RECALL_ORACLE,
-    tags=("llmdata", "similarity"),
 )
 def q_sim_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN with k-means-TRAINED centroids, SELF-ATTESTING: the
@@ -1221,7 +1201,6 @@ def q_sim_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_sim_ann_pq",
     oracle=_RECALL_ORACLE,
-    tags=("llmdata", "similarity"),
 )
 def q_sim_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ADC top-k with exact re-ranking (Jégou et
@@ -1247,7 +1226,6 @@ def q_sim_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_sim_ann_persisted",
     oracle=_RECALL_ORACLE,
-    tags=("llmdata", "similarity"),
 )
 def q_sim_ann_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PERSISTED IVF index path (operators/ann_index.py),
@@ -1307,7 +1285,6 @@ def q_sim_ann_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
            sha256(text) AS payload_hash
     FROM documents
     """,
-    tags=("llmdata", "multimodal"),
 )
 def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Opaque-binary payload + typed metadata columns (schema layer of
@@ -1352,7 +1329,6 @@ _MM_BYTESUM = (
                  END, 4) AS mean_byte
     FROM m
     """,
-    tags=("llmdata", "multimodal", "pandas"),
 )
 def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """mapInPandas decode/feature-extraction over binary payloads
@@ -1377,7 +1353,6 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS byte_offset
     FROM m
     """,
-    tags=("llmdata", "multimodal"),
 )
 def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video frame-sampling plumbing: sampled frame index rows (frame
@@ -1403,7 +1378,6 @@ def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
                       / 255.0 * 10000 + 0.5) AS BIGINT) AS mean_e4
     FROM f
     """,
-    tags=("llmdata", "multimodal", "pandas"),
 )
 def q_multimodal_frames_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame sampling through a REAL multi-frame container: synthetic
@@ -1441,7 +1415,6 @@ def q_multimodal_frames_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     f AS (SELECT da, db, CAST(unnest(range(0, n)) AS BIGINT) AS fi FROM p)
     SELECT da * 16 + fi AS id_a, db * 16 + fi AS id_b FROM f
     """,
-    tags=("llmdata", "multimodal", "dedup"),
 )
 def q_dedup_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FRAME-level near-dup pairs across animated containers — the
@@ -1485,7 +1458,6 @@ def q_dedup_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE NOT (d.doc_id % 2 = 1 AND EXISTS (
         SELECT 1 FROM documents e WHERE e.doc_id = d.doc_id - 1))
     """,
-    tags=("llmdata", "multimodal", "dedup"),
 )
 def q_dedup_videos(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CONTAINER-level (video) dedup decided by FRAME-level evidence —
@@ -1535,7 +1507,6 @@ def q_dedup_videos(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents a JOIN documents b ON b.doc_id = a.doc_id + 1
     WHERE a.doc_id % 2 = 0
     """,
-    tags=("llmdata", "multimodal", "dedup"),
 )
 def q_dedup_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual-hash IMAGE near-dup pairs over the real PNG decoder
@@ -1573,7 +1544,6 @@ def q_dedup_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents a JOIN documents b ON b.doc_id = a.doc_id + 1
     WHERE a.doc_id % 2 = 0
     """,
-    tags=("llmdata", "multimodal", "dedup"),
 )
 def q_dedup_phash_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``q_dedup_phash`` on BASELINE JPEG payloads (r12) — the same
@@ -1611,7 +1581,6 @@ def q_dedup_phash_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents a JOIN documents b ON b.doc_id = a.doc_id + 1
     WHERE a.doc_id % 2 = 0
     """,
-    tags=("llmdata", "multimodal", "dedup"),
 )
 def q_dedup_phash_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """pHash dedup over a MIXED-format image corpus (r12): the same
@@ -1643,7 +1612,6 @@ def q_dedup_phash_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents a JOIN documents b ON b.doc_id = a.doc_id + 1
     WHERE a.doc_id % 2 = 0
     """,
-    tags=("llmdata", "multimodal", "dedup"),
 )
 def q_dedup_phash_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """pHash dedup across the two JPEG ENTROPY CODINGS (r13): the same
@@ -1685,7 +1653,6 @@ def q_dedup_phash_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE NOT (d.doc_id % 2 = 1 AND EXISTS (
         SELECT 1 FROM documents e WHERE e.doc_id = d.doc_id - 1))
     """,
-    tags=("llmdata", "multimodal", "dedup"),
 )
 def q_dedup_phash_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The pHash-deduplicated image corpus: connected components over
@@ -1728,7 +1695,6 @@ def q_dedup_phash_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents a JOIN documents b ON b.doc_id = a.doc_id + 1
     WHERE a.doc_id % 2 = 0
     """,
-    tags=("llmdata", "multimodal", "dedup"),
 )
 def q_dedup_audiohash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Energy-envelope AUDIO near-dup pairs over the real WAV decoder
@@ -1763,7 +1729,6 @@ def q_dedup_audiohash(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE NOT (d.doc_id % 2 = 1 AND EXISTS (
         SELECT 1 FROM documents e WHERE e.doc_id = d.doc_id - 1))
     """,
-    tags=("llmdata", "multimodal", "dedup", "pipeline"),
 )
 def q_pipeline_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The media twin of ``q_pipeline_e2e``: decode → resize → pHash
@@ -1831,7 +1796,6 @@ def q_pipeline_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE NOT (d.doc_id % 2 = 1 AND EXISTS (
         SELECT 1 FROM documents e WHERE e.doc_id = d.doc_id - 1))
     """,
-    tags=("llmdata", "multimodal", "dedup"),
 )
 def q_dedup_audiohash_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The envelope-hash-deduplicated AUDIO corpus (r11): connected
@@ -1870,7 +1834,6 @@ def q_dedup_audiohash_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE NOT (d.doc_id % 2 = 1 AND EXISTS (
         SELECT 1 FROM documents e WHERE e.doc_id = d.doc_id - 1))
     """,
-    tags=("llmdata", "multimodal", "dedup", "pipeline"),
 )
 def q_pipeline_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The AUDIO pipeline composed end-to-end (r11) — the WAV twin of
@@ -1931,7 +1894,6 @@ def q_pipeline_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(520 AS INT) AS n_frames, TRUE AS mean_ok
     FROM documents
     """,
-    tags=("llmdata", "multimodal", "pandas"),
 )
 def q_audio_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL audio downsample through Spark (r11): synthetic 8 kHz
@@ -1976,7 +1938,6 @@ def q_audio_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
            TRUE AS mean_ok
     FROM documents
     """,
-    tags=("llmdata", "multimodal", "pandas"),
 )
 def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL image resize through Spark: synthetic 16×16 PNGs are
@@ -2027,7 +1988,6 @@ def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM corp c JOIN bench b ON c.shingle = b.shingle
     GROUP BY 1
     """,
-    tags=("llmdata", "decontam"),
 )
 def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination: corpus documents sharing ≥1 word
@@ -2062,7 +2022,6 @@ _SEMDECON_T_E6 = 300_000
            (max_bench_cos_e6 >= {_SEMDECON_T_E6}) AS contaminated
     FROM mx
     """,
-    tags=("llmdata", "decontam", "similarity"),
 )
 def q_decontaminate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SEMANTIC benchmark decontamination: per corpus vector, the max
@@ -2104,7 +2063,7 @@ def _pii_oracle() -> str:
     """
 
 
-@query("q_pii_redact", oracle=_pii_oracle(), headline=True, tags=("llmdata", "pii"))
+@query("q_pii_redact", oracle=_pii_oracle(), headline=True)
 def q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII scrubbing: count and redact email/phone/IPv4 matches per
     document (patterns restricted to the Java-regex ∩ RE2 subset so
@@ -2135,7 +2094,6 @@ def q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE d.doc_id % 50 != 0
       AND d.doc_id NOT IN (SELECT doc_id FROM hits)
     """,
-    tags=("llmdata", "decontam"),
 )
 def q_decontaminate_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The decontaminated corpus itself: every non-benchmark document
@@ -2225,7 +2183,6 @@ def _fuzzy_decontam_oracle() -> str:
 @query(
     "q_decontaminate_fuzzy",
     oracle=_fuzzy_decontam_oracle(),
-    tags=("llmdata", "decontam", "dedup"),
 )
 def q_decontaminate_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NEAR-duplicate benchmark decontamination: corpus docs whose
@@ -2267,7 +2224,6 @@ def q_decontaminate_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(round(1000000.0 / coalesce(p.n_dups, 1)) AS BIGINT) AS weight_e6
     FROM documents d LEFT JOIN per_doc p ON p.doc_id = d.doc_id
     """,
-    tags=("llmdata", "dedup"),
 )
 def q_dedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-aware loss weighting (soft dedup): instead of
@@ -2323,7 +2279,6 @@ _MIX_BUDGET_TOKENS = 600
     WHERE cum_tok <= {_MIX_BUDGET_TOKENS}
     """,
     headline=True,
-    tags=("llmdata", "corpus"),
 )
 def q_mixture_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data-mixture curation: per source, keep documents (in stable
@@ -2384,7 +2339,6 @@ def q_mixture_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM kept
     GROUP BY doc_id
     """,
-    tags=("llmdata", "dedup"),
 )
 def q_dedup_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4-style cross-document line deduplication: drop any "line"
@@ -2488,7 +2442,6 @@ _SPAN_GRAM_LEN = 8
            CAST(coalesce(agg.nds, 0) AS BIGINT) AS n_dup_spans
     FROM tk LEFT JOIN agg USING (doc_id)
     """,
-    tags=("llmdata", "dedup"),
 )
 def q_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact duplicated-span census over the corpus: per document, how
@@ -2543,7 +2496,6 @@ def q_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
            coalesce(clean.clean_text, '') AS clean_text
     FROM tk LEFT JOIN clean USING (doc_id)
     """,
-    tags=("llmdata", "dedup"),
 )
 def q_dedup_spans_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The span-CLIPPED corpus — Lee et al. 2022's removal step:
@@ -2589,7 +2541,6 @@ def q_dedup_spans_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
                      (a, b) -> a + b) * 1e9) AS BIGINT) AS recon_err2_e9
     FROM qq
     """,
-    tags=("llmdata", "similarity"),
 )
 def q_quantize_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Int8 symmetric quantization of the embedding column — the
@@ -2700,7 +2651,6 @@ def q_quantize_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY centroid_cos ASC, vec_id ASC
     LIMIT 20
     """,
-    tags=("llmdata", "similarity"),
 )
 def q_embed_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semantic outlier detection (DataComp-style embedding quality
@@ -2822,7 +2772,6 @@ def _pagerank_ctes() -> str:
     ORDER BY component_id
     """,
     headline=True,
-    tags=("llmdata", "dedup", "graph"),
 )
 def q_dedup_canonical_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Centrality-based survivor selection: the canonical document per
@@ -2950,7 +2899,6 @@ _SEM_CTES = f"""{_SEM_PAIR_CTES},
     GROUP BY component_id
     """,
     headline=True,
-    tags=("llmdata", "dedup", "similarity"),
 )
 def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): semantic dedup by
@@ -3131,7 +3079,6 @@ def _semantic_members(spark: SparkSession, sf_dir: str):
     FROM embeddings e3
     WHERE e3.vec_id NOT IN (SELECT node FROM losers)
     """,
-    tags=("llmdata", "dedup", "similarity"),
 )
 def q_dedup_semantic_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The semantically pruned corpus itself: every vector except the
@@ -3189,7 +3136,6 @@ def q_dedup_semantic_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY c.component_id
     """,
     headline=True,
-    tags=("llmdata", "dedup", "similarity"),
 )
 def q_dedup_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-signal (ensemble) dedup: the LEXICAL near-dup graph
@@ -3279,7 +3225,6 @@ def q_dedup_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS clustering_e6
     FROM tri, wed
     """,
-    tags=("llmdata", "dedup", "graph"),
 )
 def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangle census of the near-dup pair graph: triangle count,
@@ -3364,7 +3309,6 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents d
     WHERE d.doc_id NOT IN (SELECT node FROM losers)
     """,
-    tags=("llmdata", "dedup", "similarity"),
 )
 def q_dedup_ensemble_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The multi-signal deduplicated corpus — what a production
@@ -3437,7 +3381,6 @@ _KNN_HOLDOUT = 20
         FROM votes
     ) WHERE vr = 1
     """,
-    tags=("llmdata", "similarity"),
 )
 def q_knn_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """kNN label propagation: classify each held-out vector (vec_id <
@@ -3510,7 +3453,6 @@ _HN_K = 3
         FROM pairs
     ) WHERE rank <= {_HN_K}
     """,
-    tags=("llmdata", "similarity"),
 )
 def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Contrastive hard-negative mining: for each of the 20 holdout
@@ -3566,7 +3508,6 @@ _HN_RECALL_ORACLE = f"""
 @query(
     "q_hard_negatives_ann",
     oracle=_HN_RECALL_ORACLE,
-    tags=("llmdata", "similarity"),
 )
 def q_hard_negatives_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hard-negative mining on the trained IVF index — the PRODUCTION
@@ -3652,7 +3593,6 @@ def _mmr_ctes() -> str:
     SELECT rank, id AS vec_id, rel_e6, mmr_score
     FROM ({" UNION ALL ".join(f"SELECT * FROM sel{r}" for r in range(1, _MMR_K + 1))})
     """,
-    tags=("llmdata", "similarity", "iterative"),
 )
 def q_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maximal Marginal Relevance selection (Carbonell & Goldstein
@@ -3772,7 +3712,6 @@ _TRIPLET_MARGIN_E6 = 200_000
                AS violates_margin
     FROM pos JOIN neg USING (query_id)
     """,
-    tags=("llmdata", "similarity"),
 )
 def q_triplet_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch-hard triplet mining for contrastive training: per holdout
@@ -3817,7 +3756,6 @@ def q_triplet_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM sh s JOIN df f USING (shingle)
     GROUP BY s.doc_id
     """,
-    tags=("llmdata", "text"),
 )
 def q_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-document novelty score: the fraction of a document's
@@ -3886,7 +3824,6 @@ def q_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
                      ELSE 0 END AS BIGINT) AS main_len
     FROM documents
     """,
-    tags=("llmdata", "text", "ingestion"),
 )
 def q_extract_html(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HTML main-content extraction CENSUS (r14) — the ingestion
@@ -3929,7 +3866,6 @@ def q_extract_html(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM collapsed
     WHERE doc_id % 7 <> 0 AND length(main_text) >= 25
     """,
-    tags=("llmdata", "text", "ingestion"),
 )
 def q_extract_html_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HTML main-content extraction APPLY face (r14): the clean
@@ -3997,7 +3933,6 @@ def _warc_clean_corpus(
     FROM collapsed
     WHERE doc_id % 7 <> 0 AND length(main_text) >= 25
     """,
-    tags=("llmdata", "text", "ingestion"),
 )
 def q_extract_warc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end crawl ingestion (r14): WARC archive → response
@@ -4042,7 +3977,6 @@ def q_extract_warc(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM collapsed
     WHERE doc_id % 7 <> 0 AND length(main_text) >= 25
     """,
-    tags=("llmdata", "text", "ingestion"),
 )
 def q_extract_warc_gz(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end crawl ingestion over the ``.warc.gz``
@@ -4103,7 +4037,6 @@ def q_extract_warc_gz(spark: SparkSession, sf_dir: str) -> DataFrame:
                || '/~u%2Fws?a=1&b=2' AS canonical_url
     FROM g
     """,
-    tags=("llmdata", "text", "ingestion"),
 )
 def q_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """URL canonicalization census (r14) — the crawl-dedup stage
@@ -4187,7 +4120,6 @@ def q_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNION ALL
     SELECT doc_id, href FROM promos
     """,
-    tags=("llmdata", "text", "ingestion"),
 )
 def q_extract_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Web-graph construction (r14): every page's outgoing link edges

@@ -59,7 +59,6 @@ SELECT event_id, epoch_ms(ts) AS ts_ms, user_id, event_type, value FROM events
     ) = 1
     """,
     headline=True,
-    tags=("reference", "O4"),
 )
 def q_dedup_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O4: last-writer-wins per entity id over the events stream."""
@@ -75,7 +74,6 @@ def q_dedup_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
         PARTITION BY user_id ORDER BY ts_ms DESC, event_id DESC
     ) = 1
     """,
-    tags=("reference", "O5"),
 )
 def q_dedup_latest_by_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O5: single latest record per join key (user_id)."""
@@ -97,7 +95,6 @@ _O_COLS = ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderp
       ON c.c_custkey = o.o_custkey
     """,
     headline=True,
-    tags=("reference", "O6"),
 )
 def q_join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O6: versioned full-outer customer⋈orders on custkey.
@@ -122,7 +119,6 @@ def q_join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
            o.o_orderkey, o.o_totalprice, o.o_orderstatus
     FROM customer c LEFT OUTER JOIN orders o ON c.c_custkey = o.o_custkey
     """,
-    tags=("reference", "O7"),
 )
 def q_join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O7: left-outer with left side collapsed to one row per key."""
@@ -147,7 +143,6 @@ def q_join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM orders GROUP BY o_custkey
     ) g ON c.c_custkey = g.o_custkey
     """,
-    tags=("reference", "O8"),
 )
 def q_join_left_outer_seq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O8: (X, Seq[Y]) — one row per left entity, array of right rows
@@ -184,7 +179,6 @@ def q_join_left_outer_seq(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) sg ON cg.c_nationkey = sg.s_nationkey
     """,
     headline=True,
-    tags=("reference", "O9"),
 )
 def q_join_full_outer_seq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O9: true cogroup shape (Seq[X], Seq[Y]) per key — customers vs
@@ -219,7 +213,6 @@ def q_join_full_outer_seq(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT s.s_suppkey, s.s_name, s.s_acctbal, n.n_nationkey, n.n_name, n.n_regionkey
     FROM supplier s JOIN nation n ON s.s_nationkey = n.n_nationkey
     """,
-    tags=("reference", "O10"),
 )
 def q_join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O10 (dead code in the reference, live here): inner versioned join;

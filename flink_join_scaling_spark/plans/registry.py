@@ -2,9 +2,11 @@
 
 Each entry pairs a Spark DataFrame builder ``fn(spark, sf_dir)`` with an
 optional DuckDB-oracle SQL string over the same parquet tables. This is
-the contract checked by the driver through ``__spark_entry__.py``
-(``queries()`` / ``oracle_sql()``): row count + schema + order-
-insensitive value hash at sf0.01.
+the contract checked through ``__spark_entry__.py`` (``queries()`` /
+``oracle_sql()``): row count + schema + order-insensitive value hash at
+sf0.01. Queries are listed, and run, in registration order: the order
+in which ``plans/__init__.py`` imports the query modules, then source
+order within each module.
 
 Oracle-comparability rules applied throughout the query modules:
 - alias every computed column identically in Spark and SQL;
@@ -22,7 +24,7 @@ Oracle-comparability rules applied throughout the query modules:
 from __future__ import annotations
 
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -33,367 +35,27 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 class QuerySpec:
     name: str
     fn: QueryFn
-    oracle: str | None = None  # DuckDB SQL; None → driver does rows-only check
+    oracle: str | None = None  # DuckDB SQL; None → rows-only check
     headline: bool = False  # included in bench.py
-    tags: tuple[str, ...] = field(default_factory=tuple)
 
 
 QUERIES: dict[str, QuerySpec] = {}
 
-#: Queries whose oracle parity crosses a round-6 float boundary on
-#: pairwise-summed dot products: Spark evaluates them through the
-#: NumPy/Arrow path (pairwise summation) while DuckDB folds
-#: sequentially (see functions/vectors.py cosine6_pandas note) — an
-#: accepted, property-tested ulp risk. If a regeneration flakes the
-#: driver hash on EXACTLY these names, triage there first; it is the
-#: documented boundary, not a logic bug. Kept in sync with the
-#: "float-boundary-sensitive" query tag by a registry test.
-FLOAT_BOUNDARY_SENSITIVE: tuple[str, ...] = (
-    # EMPTY since round 10: the last two residents adopted the
-    # e6-BIGINT recipe — q_dedup_embedding scores/thresholds on
-    # CAST(round(cos*1e6) AS BIGINT) (integer compare, no decimal-
-    # rounding ulp at the 0.45 boundary) and q_sim_ann_lsh takes its
-    # sign-random-projection bucket bits on the e6-quantized plane
-    # dots (a |dot| within summation noise of zero rounds to the same
-    # integer 0 in both engines). The documented ulp-risk class is
-    # closed; the manifest and tag machinery stay for any future
-    # query that reopens it.
-    # History of this manifest (each cohort left by adopting integer
-    # quantization): the SemDeDup/ensemble family left in round 7
-    # (pair thresholds, argmin keys, and exposed centroid cosines
-    # became e6 BIGINTs — functions/vectors.cosine_e6_pandas); the
-    # quality-display cohort (q_quality_score/filter, q_source_stats,
-    # q_dedup_keep_best) left in round 8 (raw-double predicates/order
-    # keys + e4/e6 integer display, the q_source_cap discipline —
-    # their decimal round(…,4) display hit a cross-engine midpoint on
-    # some fixtures, e.g. doc 234 at sf0.001); and the whole
-    # similarity top-k family ranks on e6 BIGINTs since round 8. The
-    # last two residents (q_dedup_embedding's round-6 pair threshold,
-    # q_sim_ann_lsh's dot>0 bucket sign) left in round 10 as above.
-)
-
 
 def query(
-    name: str,
-    oracle: str | None = None,
-    headline: bool = False,
-    tags: tuple[str, ...] = (),
+    name: str, oracle: str | None = None, headline: bool = False
 ) -> Callable[[QueryFn], QueryFn]:
     def deco(fn: QueryFn) -> QueryFn:
         if name in QUERIES:
             raise ValueError(f"duplicate query name {name!r}")
-        QUERIES[name] = QuerySpec(name, fn, oracle, headline, tags)
+        QUERIES[name] = QuerySpec(name, fn, oracle, headline)
         return fn
 
     return deco
 
 
-# ------------------------------------------------------------------
-# Driver-window rotation (round 9 policy: stalest-first, mechanically)
-#
-# The driver replays the first ~50 entries of ``query_fns()`` each
-# round under a time budget. ``_LAST_GREEN`` maps every query to the
-# round of its LATEST hash-green CORRECTNESS row, folded through
-# ``ROTATION_FOLDED_THROUGH``; ordering ascends on that round so the
-# window always lands on the stalest attestations automatically — the
-# hand-curated ``_NEEDS_FRESH_ROW`` lists of rounds 5-8 are retired
-# (they required re-deriving the cohort every round and twice deferred
-# names past 3-rounds-stale). ``tests/test_registry_rotation.py``
-# recomputes this map from the CORRECTNESS files on disk and fails on
-# any divergence, and enforces the standing policy: after each round's
-# window runs, no query's latest green row may be older than
-# ``ROTATION_FOLDED_THROUGH - 2`` (every ≥3-rounds-stale name must
-# rank inside the window).
-_LAST_GREEN: dict[str, int] = {
-    "q_agg_cube": 14, "q_agg_distinct": 14, "q_agg_group": 14,
-    "q_agg_grouping_sets": 13, "q_agg_rollup": 14, "q_agg_skew_salted": 13,
-    "q_approx_distinct": 14, "q_approx_quantiles": 13, "q_array_explode": 14,
-    "q_array_funcs": 14, "q_audio_resample": 15, "q_bm25": 14,
-    "q_bpe_encode": 15, "q_bpe_train": 15, "q_cms_freq": 15,
-    "q_cohort_retention": 13, "q_collocations": 14, "q_date_funcs": 14,
-    "q_decontaminate": 15, "q_decontaminate_apply": 17,
-    "q_decontaminate_fuzzy": 15, "q_decontaminate_semantic": 13,
-    "q_dedup_apply": 17, "q_dedup_audiohash": 15,
-    "q_dedup_audiohash_apply": 15, "q_dedup_canonical_rank": 14,
-    "q_dedup_components": 15, "q_dedup_containment": 13,
-    "q_dedup_embedding": 14, "q_dedup_embedding_ivf": 14,
-    "q_dedup_ensemble": 15, "q_dedup_ensemble_apply": 17, "q_dedup_exact": 13,
-    "q_dedup_exact_apply": 15, "q_dedup_frames": 15, "q_dedup_keep_best": 17,
-    "q_dedup_latest": 15, "q_dedup_latest_by_key": 17, "q_dedup_lines": 13,
-    "q_dedup_minhash": 13, "q_dedup_minhash_ml": 13, "q_dedup_ngram": 15,
-    "q_dedup_phash": 15, "q_dedup_phash_apply": 15, "q_dedup_phash_jpeg": 17,
-    "q_dedup_phash_mixed": 17, "q_dedup_phash_progressive": 13,
-    "q_dedup_semantic": 15, "q_dedup_semantic_apply": 15,
-    "q_dedup_simhash": 15, "q_dedup_spans": 15, "q_dedup_spans_apply": 15,
-    "q_dedup_videos": 17, "q_dedup_weights": 15, "q_dedup_winnow": 13,
-    "q_dedup_winnow_apply": 13, "q_dq_profile": 13, "q_dq_rules": 13,
-    "q_dsir_select": 12, "q_dsir_weights": 12, "q_ema": 13,
-    "q_embed_centroids": 15, "q_embed_outliers": 14, "q_entity_resolution": 13,
-    "q_extract_html": 17, "q_extract_html_apply": 17, "q_extract_links": 17,
-    "q_extract_warc": 17, "q_extract_warc_gz": 17, "q_fingerprint": 13,
-    "q_funnel": 17, "q_fuzzy_match": 13, "q_gapfill": 13, "q_gopher_rules": 13,
-    "q_graph_triangles": 14, "q_hard_negatives": 17,
-    "q_hard_negatives_ann": 13, "q_heavy_hitters": 14,
-    "q_higher_order_funcs": 13, "q_histogram": 13, "q_hll_rollup": 14,
-    "q_inverted_index": 15, "q_join_anti": 17, "q_join_asof": 17,
-    "q_join_bloom_reduced": 14, "q_join_full_outer": 13,
-    "q_join_full_outer_seq": 14, "q_join_inner": 14, "q_join_left_outer": 14,
-    "q_join_left_outer_seq": 14, "q_join_range": 17, "q_join_semi": 17,
-    "q_join_skew_salted": 13, "q_json_funcs": 13, "q_knn_labels": 17,
-    "q_lang_id": 13, "q_length_buckets": 15, "q_lm_bigram": 17,
-    "q_lm_bigram_hashed": 13, "q_lm_score": 14, "q_math_funcs": 14,
-    "q_mixture_budget": 17, "q_mixture_temperature": 17,
-    "q_mixture_weights": 14, "q_mmr_select": 13, "q_multimodal_features": 15,
-    "q_multimodal_frames": 15, "q_multimodal_frames_real": 15,
-    "q_multimodal_meta": 15, "q_multimodal_resize": 15, "q_nb_confusion": 12,
-    "q_nb_lang_apply": 12, "q_nb_lang_train": 12, "q_novelty": 17,
-    "q_pack_sequences": 15, "q_percentiles": 17, "q_pii_redact": 15,
-    "q_pipeline_audio": 17, "q_pipeline_e2e": 14, "q_pipeline_media": 15,
-    "q_pipeline_trained": 12, "q_pivot": 17, "q_ppl_buckets": 14,
-    "q_quality_classifier": 17, "q_quality_classifier_apply": 17,
-    "q_quality_filter": 17, "q_quality_score": 17, "q_quantize_embeddings": 13,
-    "q_repetition": 15, "q_retrieval_rrf": 14, "q_rollup_multires": 13,
-    "q_sample_hash": 15, "q_sample_stratified": 15, "q_scalar_subquery": 13,
-    "q_scan_filter_project": 14, "q_scd2_intervals": 13, "q_sessionize": 17,
-    "q_set_except": 14, "q_set_intersect": 14, "q_set_union": 14,
-    "q_shard_assignment": 14, "q_sim_ann_ivf": 15, "q_sim_ann_ivf_trained": 13,
-    "q_sim_ann_lsh": 14, "q_sim_ann_persisted": 13, "q_sim_ann_pq": 15,
-    "q_sim_topk": 17, "q_sim_topk_pandas": 15, "q_snapshot_diff": 14,
-    "q_source_cap": 15, "q_source_drift": 14, "q_source_overlap": 14,
-    "q_source_stats": 17, "q_split_leakage_safe": 14, "q_stream_dedup": 15,
-    "q_stream_join": 13, "q_stream_session": 15, "q_stream_sliding": 15,
-    "q_stream_tumbling": 15, "q_string_funcs": 14, "q_text_chunks": 13,
-    "q_text_stats": 13, "q_tfidf": 14, "q_token_count": 13,
-    "q_tokenizer_fertility": 13, "q_topk": 14, "q_tpch_q10_returns": 17,
-    "q_tpch_q11_important_stock": 17, "q_tpch_q12_priority_class": 17,
-    "q_tpch_q13_order_distribution": 13, "q_tpch_q14_promo": 17,
-    "q_tpch_q15_top_supplier": 17, "q_tpch_q16_supplier_counts": 17,
-    "q_tpch_q17_small_quantity": 13, "q_tpch_q18_large_orders": 17,
-    "q_tpch_q19_disjunctive_rev": 17, "q_tpch_q1_pricing": 14,
-    "q_tpch_q20_excess_suppliers": 17, "q_tpch_q21_waiting_suppliers": 13,
-    "q_tpch_q22_dormant_customers": 13, "q_tpch_q2_min_cost_supplier": 17,
-    "q_tpch_q3_shipping": 15, "q_tpch_q4_late_orders": 17,
-    "q_tpch_q5_local_supplier": 15, "q_tpch_q6_forecast": 15,
-    "q_tpch_q7_nation_volume": 13, "q_tpch_q8_market_share": 17,
-    "q_tpch_q9_product_profit": 17, "q_transition_matrix": 13,
-    "q_triplet_mining": 13, "q_unpivot": 17, "q_url_canonicalize": 17,
-    "q_value_outliers": 17, "q_vocab_df": 15, "q_window_analytic": 14,
-    "q_window_distribution": 13, "q_window_range_frame": 13,
-    "q_window_rank": 14, "q_zorder_layout": 14,
-}
-
-#: Back-compat view used by tests: the set of queries holding ANY
-#: driver-green row through the folded round.
-_DRIVER_GREEN: frozenset[str] = frozenset(_LAST_GREEN)
-
-#: Highest CORRECTNESS round whose greens are folded into
-#: ``_LAST_GREEN``. The rotation-hygiene test allows exactly ONE
-#: newer round file on disk (the driver writes r{N+1} after the
-#: round's last commit, so it can only be folded next round); two
-#: newer rounds mean the rotation went stale — the starvation bug this
-#: machinery exists to prevent — and the test fails loudly.
-ROTATION_FOLDED_THROUGH = 17
-
-# Queries whose output CHANGED this round, invalidating their prior
-# green rows outright (not merely aging them). Round 18: EMPTY — an
-# optimization round; no declared query's output may change.
-_CHANGED_THIS_ROUND: frozenset[str] = frozenset()
-
-#: Names whose operator code changed after their latest green row was
-#: recorded, with an argument — not a driver-attested proof — that
-#: outputs are unchanged. Promoted ahead of their same-staleness peers
-#: so the window re-executes the argument cheaply. Round 18 folds BOTH
-#: r16 and r17 (r17 was optimization round 1 and did not rotate — its
-#: window re-ran r16's byte-identical 50 names). The r17 verdict names
-#: the semantics-relevant r17 optimizations that shipped on
-#: differential tests + builder self-attestation only; the window must
-#: re-execute them under the DuckDB oracle:
-#: - q_bpe_train / q_bpe_encode: fused single-Arrow-task BPE trainer
-#:   (`operators/bpe.py::_train_fused`, r17 batch 1).
-#: - q_dedup_canonical_rank: size-gated driver-side PageRank replay
-#:   (`operators/dedup.py::_pagerank_driver`, r17 batch 3) — and its
-#:   r18 NumPy vectorization rides the same attestation.
-#: - q_lm_bigram_hashed: per-token unigram bucket array restructure
-#:   (`plans/corpus.py`, r17 batch 2).
-#: - q_dedup_semantic: SemDeDup centroid-norm hoist (r17, `39bb1d3`).
-#: - q_dedup_winnow / q_dedup_winnow_apply: the winnow fingerprint
-#:   localCheckpoint pin (`operators/dedup.py`, r17 batch 7).
-#: - q_pipeline_e2e: the keeper-frame pin (`plans/corpus.py`, r17
-#:   batch 8).
-#: r18's own changes extend the set (same policy applied to this
-#: round): the connected_components driver-path restructure
-#: (`b20d6a2`) changes the collect/symmetrize shape under every CC
-#: consumer, the PageRank replay was vectorized, and the trained
-#: pipeline / SemDeDup gained concurrent materialization — all locally
-#: DuckDB-verified this round, and all promoted so the driver
-#: re-executes that argument.
-_TOUCHED_SINCE_GREEN: frozenset[str] = frozenset(
-    {
-        "q_bpe_train",
-        "q_bpe_encode",
-        "q_dedup_canonical_rank",
-        "q_lm_bigram_hashed",
-        "q_dedup_semantic",
-        "q_dedup_winnow",
-        "q_dedup_winnow_apply",
-        "q_pipeline_e2e",
-        # r18 CC-restructure consumers + overlap-touched composes
-        "q_dedup_components",
-        "q_dedup_semantic_apply",
-        "q_dedup_ensemble",
-        "q_dedup_ensemble_apply",
-        "q_dedup_phash_apply",
-        "q_dedup_videos",
-        "q_pipeline_media",
-        "q_dedup_audiohash_apply",
-        "q_pipeline_audio",
-        "q_dedup_weights",
-        "q_dedup_keep_best",
-        "q_dedup_apply",
-        "q_entity_resolution",
-        "q_pipeline_trained",
-        # r18 quartile-histogram fold (one-job labeling walk)
-        "q_quality_classifier",
-        "q_quality_classifier_apply",
-    }
-)
-
-#: Names explicitly deferred from the previous round, ordered at the
-#: very front of their staleness cohort so a driver time-budget cutoff
-#: starves the freshest names, never these. Round 18: the six names
-#: r16 displaced (clause (c) of the displacement discipline) — five
-#: rounds stale now, the r17 verdict's item 3 leads with them.
-_PRIORITY_FIRST: frozenset[str] = frozenset(
-    {
-        "q_dsir_select",
-        "q_dsir_weights",
-        "q_nb_confusion",
-        "q_nb_lang_apply",
-        "q_nb_lang_train",
-        "q_pipeline_trained",
-    }
-)
-
-#: Stale names mechanically displaced OUT of this round's 50-slot
-#: window because changed/touched/priority registrations preempt them.
-#: Round 18 folds TWO rounds at once (r17 was optimization round 1 and
-#: did not rotate; its window re-ran r16's byte-identical names), so
-#: the stale cohort is 101 names — more than one 50-slot window can
-#: cover; catch-up necessarily takes two rounds. Discipline unchanged:
-#: (a) this set is exactly the LOWEST-ranked stale names — the rank
-#: function decides who spills, never hand-picking; (b) the spill never
-#: exceeds preempting-names-in-window PLUS the stale cohort's own
-#: overflow beyond the window (the two-round-fold amendment — see
-#: tests/test_registry_rotation.py); (c) at the NEXT round's fold every
-#: name here moves into ``_PRIORITY_FIRST``.
-_DISPLACED_THIS_ROUND: frozenset[str] = frozenset(
-    {
-        "q_agg_cube",
-        "q_agg_distinct",
-        "q_agg_group",
-        "q_agg_rollup",
-        "q_approx_distinct",
-        "q_array_explode",
-        "q_array_funcs",
-        "q_bm25",
-        "q_cohort_retention",
-        "q_collocations",
-        "q_date_funcs",
-        "q_decontaminate_semantic",
-        "q_dedup_containment",
-        "q_dedup_embedding",
-        "q_dedup_embedding_ivf",
-        "q_dedup_exact",
-        "q_dedup_lines",
-        "q_dedup_minhash",
-        "q_dedup_minhash_ml",
-        "q_dedup_phash_progressive",
-        "q_ema",
-        "q_embed_outliers",
-        "q_fingerprint",
-        "q_gopher_rules",
-        "q_graph_triangles",
-        "q_hard_negatives_ann",
-        "q_heavy_hitters",
-        "q_hll_rollup",
-        "q_join_bloom_reduced",
-        "q_join_full_outer_seq",
-        "q_join_inner",
-        "q_join_left_outer",
-        "q_join_left_outer_seq",
-        "q_lang_id",
-        "q_lm_score",
-        "q_math_funcs",
-        "q_mixture_weights",
-        "q_mmr_select",
-        "q_ppl_buckets",
-        "q_quantize_embeddings",
-        "q_retrieval_rrf",
-        "q_scan_filter_project",
-        "q_scd2_intervals",
-        "q_set_except",
-        "q_set_intersect",
-        "q_set_union",
-        "q_shard_assignment",
-        "q_sim_ann_ivf_trained",
-        "q_sim_ann_lsh",
-        "q_sim_ann_persisted",
-        "q_snapshot_diff",
-        "q_source_drift",
-        "q_source_overlap",
-        "q_split_leakage_safe",
-        "q_stream_join",
-        "q_string_funcs",
-        "q_text_chunks",
-        "q_text_stats",
-        "q_tfidf",
-        "q_token_count",
-        "q_tokenizer_fertility",
-        "q_topk",
-        "q_tpch_q1_pricing",
-        "q_transition_matrix",
-        "q_triplet_mining",
-        "q_window_analytic",
-        "q_window_rank",
-        "q_zorder_layout",
-    }
-)
-
-#: Computed stale set (kept for the hygiene tests): every query whose
-#: latest green row is ≥3 rounds older than the folded-through round —
-#: the cohort this round's window MUST cover.
-_NEEDS_FRESH_ROW: frozenset[str] = frozenset(
-    n for n, r in _LAST_GREEN.items() if r <= ROTATION_FOLDED_THROUGH - 3
-)
-
-
 def query_fns() -> dict[str, QueryFn]:
-    """Driver iteration order. Tiers: (0) queries whose output changed
-    this round (their old rows are invalid, not just stale); (1)
-    ``_TOUCHED_SINCE_GREEN`` — operator code changed after the last
-    green row, so the attestation argument is weakest (r10 verdict:
-    "at the very front", ahead even of new registrations, so a
-    time-budget cutoff can never defer them again); (2) oracle-bearing
-    queries with no green row yet (new registrations); (3) everything
-    else ascending by latest-green round — stalest first — with
-    ``_PRIORITY_FIRST`` leading each cohort; rows-only queries sort
-    after oracle-bearing peers (a cutoff shadowing them loses nothing
-    — they can never hash-match); stable registration order breaks
-    remaining ties."""
-    order = list(QUERIES)
-
-    def rank(s: QuerySpec) -> tuple:
-        return (
-            s.name not in _CHANGED_THIS_ROUND,  # invalidated rows first
-            s.oracle is None,  # rows-only after oracle-bearing
-            s.name not in _TOUCHED_SINCE_GREEN,  # weakest attestation next
-            _LAST_GREEN.get(s.name, 0),  # never-green (0), then stalest
-            s.name not in _PRIORITY_FIRST,  # explicit leads per cohort
-            order.index(s.name),
-        )
-
-    specs = sorted(QUERIES.values(), key=rank)
-    return {s.name: s.fn for s in specs}
+    return {n: s.fn for n, s in QUERIES.items()}
 
 
 def oracle_sqls() -> dict[str, str]:

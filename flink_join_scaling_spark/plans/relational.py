@@ -40,7 +40,6 @@ def _t(spark, sf_dir, name):
       AND l_discount BETWEEN 0.03 AND 0.07
       AND l_quantity > 10
     """,
-    tags=("relational", "scan"),
 )
 def q_scan_filter_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Predicate + projection pushed into the parquet scan."""
@@ -68,7 +67,6 @@ def q_scan_filter_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY l_returnflag, l_linestatus
     """,
     headline=True,
-    tags=("relational", "agg"),
 )
 def q_agg_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
@@ -89,7 +87,6 @@ def q_agg_group(spark: SparkSession, sf_dir: str) -> DataFrame:
            count(*) AS n_orders
     FROM orders
     """,
-    tags=("relational", "agg"),
 )
 def q_agg_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
@@ -110,7 +107,6 @@ def q_agg_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem
     GROUP BY ROLLUP (l_returnflag, l_linestatus)
     """,
-    tags=("relational", "agg"),
 )
 def q_agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
@@ -131,7 +127,6 @@ def q_agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     GROUP BY CUBE (o_orderstatus, o_orderpriority)
     """,
-    tags=("relational", "agg"),
 )
 def q_agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
@@ -160,7 +155,6 @@ _APPROX_DISTINCT_TOL = 0.05
            TRUE AS supps_within_tol
     FROM lineitem
     """,
-    tags=("relational", "agg", "approx"),
 )
 def q_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HyperLogLog++ distinct counts — the scale path for cardinality
@@ -215,7 +209,6 @@ def q_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) WHERE rn <= 10
     """,
     headline=True,
-    tags=("relational", "window"),
 )
 def q_window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _t(spark, sf_dir, "customer")
@@ -248,7 +241,6 @@ def q_window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
     """,
-    tags=("relational", "window"),
 )
 def q_window_analytic(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
@@ -273,7 +265,6 @@ def q_window_analytic(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY o_totalprice DESC, o_orderkey ASC
     LIMIT 100
     """,
-    tags=("relational", "sort"),
 )
 def q_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global top-k: Spark plans TakeOrderedAndProject — per-partition
@@ -296,7 +287,6 @@ def q_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNION
     SELECT c_custkey AS custkey FROM customer WHERE c_acctbal > 8000
     """,
-    tags=("relational", "setop"),
 )
 def q_set_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _t(spark, sf_dir, "customer")
@@ -312,7 +302,6 @@ def q_set_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     INTERSECT
     SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'O'
     """,
-    tags=("relational", "setop"),
 )
 def q_set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
@@ -328,7 +317,6 @@ def q_set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXCEPT
     SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'F'
     """,
-    tags=("relational", "setop"),
 )
 def q_set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _t(spark, sf_dir, "customer")
@@ -356,7 +344,6 @@ def q_set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
            regexp_extract(p_type, '^([A-Z]+)', 1) AS type_word
     FROM part
     """,
-    tags=("relational", "scalar"),
 )
 def q_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = _t(spark, sf_dir, "part")
@@ -388,7 +375,6 @@ def q_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
            strftime(o_orderdate + INTERVAL 30 DAY, '%Y-%m-%d') AS due_date
     FROM orders
     """,
-    tags=("relational", "scalar"),
 )
 def q_date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
@@ -425,7 +411,6 @@ def q_date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ELSE 'large' END AS qty_band
     FROM lineitem
     """,
-    tags=("relational", "scalar"),
 )
 def q_math_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
@@ -461,7 +446,6 @@ def q_math_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(label AS BIGINT) AS label
     FROM embeddings
     """,
-    tags=("relational", "array"),
 )
 def q_array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array ops stay JVM-side: size / element_at / higher-order
@@ -490,7 +474,6 @@ def q_array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM embeddings
     WHERE vec_id < 20
     """,
-    tags=("relational", "array"),
 )
 def q_array_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "embeddings").where(F.col("vec_id") < 20)
@@ -519,7 +502,6 @@ def q_array_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY l_returnflag, l_linestatus
     """,
     headline=True,
-    tags=("tpch",),
 )
 def q_tpch_q1_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
@@ -558,7 +540,6 @@ def q_tpch_q1_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
     LIMIT 10
     """,
     headline=True,
-    tags=("tpch",),
 )
 def q_tpch_q3_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-way join + agg + top-k. customer(filtered) is small relative to
@@ -607,7 +588,6 @@ def q_tpch_q3_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY n.n_name
     """,
     headline=True,
-    tags=("tpch",),
 )
 def q_tpch_q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """6-way star join; bounded dims (nation, region) are explicitly
@@ -651,7 +631,6 @@ def q_tpch_q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND l_discount BETWEEN 0.03 AND 0.07
       AND l_quantity < 24
     """,
-    tags=("tpch",),
 )
 def q_tpch_q6_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
@@ -682,7 +661,6 @@ def q_tpch_q6_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY revenue DESC, c.c_custkey ASC
     LIMIT 20
     """,
-    tags=("tpch",),
 )
 def q_tpch_q10_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10 analogue: top customers by returned-item revenue in a
@@ -724,7 +702,6 @@ def q_tpch_q10_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT round(100.0 * promo / total, 4) AS promo_pct FROM sums
     """,
-    tags=("tpch",),
 )
 def q_tpch_q14_promo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14 analogue: promo revenue share for a month. part is
@@ -768,7 +745,6 @@ def q_tpch_q14_promo(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY totalprice DESC, b.l_orderkey ASC
     LIMIT 50
     """,
-    tags=("tpch",),
 )
 def q_tpch_q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18 analogue: customers behind the largest orders. The
@@ -811,7 +787,6 @@ def q_tpch_q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
                     AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY)
     GROUP BY o_orderpriority
     """,
-    tags=("tpch",),
 )
 def q_tpch_q4_late_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 analogue (no commit/receipt dates in this schema: "late"
@@ -851,7 +826,6 @@ def q_tpch_q4_late_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE n1.n_nationkey <> n2.n_nationkey
     GROUP BY 1, 2, 3
     """,
-    tags=("tpch",),
 )
 def q_tpch_q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q7 analogue: cross-border trade volume by (supplier
@@ -911,7 +885,6 @@ def q_tpch_q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     GROUP BY n_orders
     """,
-    tags=("tpch",),
 )
 def q_tpch_q13_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q13 analogue: the distribution of orders-per-customer — a
@@ -941,7 +914,6 @@ def q_tpch_q13_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame
     ) t ON t.l_partkey = l.l_partkey
     WHERE p.p_brand = 'Brand#13' AND l.l_quantity < t.qty_cut
     """,
-    tags=("tpch",),
 )
 def q_tpch_q17_small_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q17 analogue: revenue lost to small-quantity orders of one

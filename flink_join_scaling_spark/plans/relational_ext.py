@@ -23,7 +23,6 @@ EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
                   WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 150000)
     """,
     headline=True,
-    tags=("relational", "join"),
 )
 def q_join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-semi join: customers with at least one large order. One
@@ -44,7 +43,6 @@ def q_join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
                       WHERE o.o_custkey = c.c_custkey
                         AND o.o_orderpriority = '1-URGENT')
     """,
-    tags=("relational", "join"),
 )
 def q_join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-anti join: customers with no urgent order (the unfiltered
@@ -70,7 +68,7 @@ def _pivot_oracle() -> str:
     """
 
 
-@query("q_pivot", oracle=_pivot_oracle(), tags=("relational", "pivot"))
+@query("q_pivot", oracle=_pivot_oracle())
 def q_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot: event counts per user cohort, one column per event type.
     The explicit value list keeps it a single-pass hash aggregation (no
@@ -94,7 +92,6 @@ def q_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNION ALL
     SELECT p_partkey, 'retailprice' AS metric, p_retailprice AS val FROM part
     """,
-    tags=("relational", "pivot"),
 )
 def q_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unpivot (melt) part metrics to long form — built-in ``unpivot``,
@@ -118,7 +115,6 @@ def q_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem GROUP BY l_returnflag
     """,
     headline=True,
-    tags=("relational", "agg"),
 )
 def q_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact interpolated percentiles per group (Spark ``percentile`` ≡
@@ -144,7 +140,6 @@ def q_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM customer
     GROUP BY GROUPING SETS ((c_mktsegment), (c_nationkey), ())
     """,
-    tags=("relational", "agg"),
 )
 def q_agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS (beyond rollup/cube): per-segment,
@@ -178,7 +173,6 @@ def q_agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
            ), 2) AS spend_30d
     FROM orders
     """,
-    tags=("relational", "window"),
 )
 def q_window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RANGE-frame window: per customer, rolling 30-day order count and
@@ -214,7 +208,6 @@ def q_window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     WHERE o_totalprice > 1.8 * (SELECT avg(o_totalprice) FROM orders)
     """,
-    tags=("relational", "subquery"),
 )
 def q_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Orders priced above 1.8x the global average (uniform price dist
@@ -242,7 +235,6 @@ def q_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events JOIN customer ON user_id = c_custkey
     GROUP BY c_mktsegment, event_type
     """,
-    tags=("relational", "join", "skew"),
 )
 def q_join_skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit salted join over the naturally skewed key: events
@@ -278,7 +270,6 @@ def q_join_skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM customer
     WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal ASC, c_custkey ASC)
     """,
-    tags=("relational", "window"),
 )
 def q_window_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution window functions per market segment: balance
@@ -312,7 +303,6 @@ def q_window_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE CAST(props->>'k' AS BIGINT) >= 50
     GROUP BY event_type
     """,
-    tags=("relational", "json"),
 )
 def q_json_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON column surface over events.props: schema-on-read parse
@@ -345,7 +335,6 @@ def q_json_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM embeddings
     WHERE vec_id < 100
     """,
-    tags=("relational", "array", "hof"),
 )
 def q_higher_order_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Higher-order array functions: transform / filter / exists /
@@ -381,7 +370,6 @@ def q_higher_order_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY event_type
     """,
-    tags=("relational", "agg", "skew"),
 )
 def q_agg_skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-phase salted aggregation over the 5 hot event-type groups
@@ -464,7 +452,6 @@ def _fuzzy_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH {_FUZZY_PAIRS_CTE}
     SELECT name_a, name_b, dist FROM fpairs
     """,
-    tags=("relational", "fuzzy", "dedup"),
 )
 def q_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blocked fuzzy matching (entity resolution): candidate part-name
@@ -499,7 +486,6 @@ def q_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM comp GROUP BY canonical_name
     """,
     headline=True,
-    tags=("relational", "fuzzy", "dedup"),
 )
 def q_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end entity resolution: the q_fuzzy_match candidate pairs
@@ -546,7 +532,6 @@ def q_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT event_type, bucket, CAST(count(*) AS BIGINT) AS n
     FROM x GROUP BY 1, 2
     """,
-    tags=("relational", "profiling"),
 )
 def q_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi-width histogram of event value per type: 10 global buckets
@@ -603,7 +588,6 @@ def q_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         CAST(max(epoch_ms(ts)) AS BIGINT) AS max_ts_ms
     FROM events
     """,
-    tags=("relational", "profiling"),
 )
 def q_dq_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data-quality profile of the events table (the Deequ-style
@@ -667,7 +651,6 @@ _DQ_DOMAIN = ("click", "error", "purchase", "signup", "view")
     FROM r
     ORDER BY rule
     """,
-    tags=("relational", "profiling", "quality"),
 )
 def q_dq_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Declarative data-quality rule suite (the Deequ-style admission

@@ -62,7 +62,6 @@ _WL_CTE = f"""
     SELECT c.lang, d.n_docs, c.n_tokens, c.n_class_vocab, v.vocab
     FROM cls c JOIN dc d USING (lang), v
     """,
-    tags=("llmdata", "classifier", "trained"),
 )
 def q_nb_lang_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The fitted Naive Bayes model's per-class summary: doc prior
@@ -154,7 +153,6 @@ def _nb_apply_oracle() -> str:
     "q_nb_lang_apply",
     oracle=_nb_apply_oracle(),
     headline=True,
-    tags=("llmdata", "classifier", "trained"),
 )
 def q_nb_lang_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Score every document under the trained NB model and emit the
@@ -452,7 +450,6 @@ def dsir_weight_e6_expr() -> F.Column:
     WITH {_DSIR_CTES}
     SELECT doc_id, n_toks, weight_e6 FROM dweights
     """,
-    tags=("llmdata", "sampling", "trained"),
 )
 def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document DSIR importance weight: how much more likely the
@@ -484,7 +481,6 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AS BIGINT) AS rank
     FROM top
     """,
-    tags=("llmdata", "sampling", "trained"),
 )
 def q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The selection step: the top-200 documents by importance
@@ -561,7 +557,6 @@ def _pipeline_trained_oracle() -> str:
     "q_pipeline_trained",
     oracle=_pipeline_trained_oracle(),
     headline=True,
-    tags=("llmdata", "pipeline", "trained"),
 )
 def q_pipeline_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ALL THREE trained models composed into one curation pipeline —
@@ -690,7 +685,6 @@ def q_pipeline_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
                       * 10000) AS BIGINT) AS frac_of_true_e4
     FROM cm c JOIN tot t USING (true_lang)
     """,
-    tags=("llmdata", "classifier", "trained"),
 )
 def q_nb_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The trained NB classifier's confusion matrix — the EVAL half of

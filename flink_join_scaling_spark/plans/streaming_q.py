@@ -36,7 +36,6 @@ _FMT_DUCK = "%Y-%m-%d %H:%M:%S"
     GROUP BY 1, 2
     """,
     headline=True,
-    tags=("streaming", "window"),
 )
 def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour windows (epoch-aligned, = date_trunc)."""
@@ -68,7 +67,6 @@ def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     GROUP BY 1, 2
     """,
-    tags=("streaming", "window"),
 )
 def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding 1-hour windows every 30 min: each event belongs to the
@@ -109,7 +107,6 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM sessions
     GROUP BY user_id, sess_id
     """,
-    tags=("streaming", "window"),
 )
 def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session windows, 6 h inactivity gap. Spark closes a session when
@@ -137,7 +134,6 @@ def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
         ORDER BY epoch_ms(ts) DESC, event_id DESC
     ) = 1
     """,
-    tags=("streaming", "dedup"),
 )
 def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Converged result of streaming versioned dedup: latest event per
@@ -172,7 +168,6 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE pu.purchase_ms >= ck.click_ms
       AND pu.purchase_ms <= ck.click_ms + 1800000
     """,
-    tags=("streaming", "join"),
 )
 def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream interval join (click -> purchase attribution

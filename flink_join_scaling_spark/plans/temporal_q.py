@@ -43,7 +43,6 @@ def _typed_events(spark: SparkSession, sf_dir: str, event_type: str) -> DataFram
       ON p.user_id = c.user_id AND p.ts_us >= c.ts_us
     """,
     headline=True,
-    tags=("temporal", "asof"),
 )
 def q_join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Backward as-of: each purchase picks the user's most recent click
@@ -79,7 +78,6 @@ _RANGE_US = 10 * 60 * 1_000_000  # 10 minutes in micros
     GROUP BY e.event_id
     """,
     headline=True,
-    tags=("temporal", "range"),
 )
 def q_join_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interval join: views by the same user in the 10 minutes before
@@ -125,7 +123,6 @@ _SESSION_GAP_NS = 30 * 60 * 1_000_000_000  # 30 minutes
     FROM sess
     GROUP BY user_id, sid
     """,
-    tags=("temporal", "session"),
 )
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch gap-based sessionization (30-minute inactivity gap) with
@@ -156,7 +153,6 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events e JOIN stats s ON s.event_type = e.event_type
     WHERE abs((e.value - s.mu) / s.sd) > 2.5
     """,
-    tags=("temporal", "quality"),
 )
 def q_value_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type z-score outliers (|z| > 2.5). Deliberately NOT a
@@ -193,7 +189,6 @@ def q_value_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST((SELECT count(*) FROM c) AS BIGINT) AS users_click,
            CAST((SELECT count(*) FROM p) AS BIGINT) AS users_purchase
     """,
-    tags=("temporal", "funnel"),
 )
 def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered conversion funnel view → click → purchase: users whose
@@ -256,7 +251,6 @@ def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM grid g LEFT JOIN counts c
       ON c.hour = g.hour AND c.event_type = g.event_type
     """,
-    tags=("temporal", "timeseries"),
 )
 def q_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-series gap filling: a dense hourly (hour x event_type) grid
@@ -314,7 +308,6 @@ _APPROX_Q_TOL = 0.05
     FROM lineitem
     GROUP BY l_returnflag
     """,
-    tags=("relational", "agg", "approx"),
 )
 def q_approx_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate quantile sketch, driver-checkable like
@@ -373,7 +366,6 @@ def q_approx_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
            event_type, n, ve4
     FROM daily
     """,
-    tags=("temporal", "rollup"),
 )
 def q_rollup_multires(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hypertable-style multi-resolution rollup (continuous-aggregate
@@ -456,7 +448,6 @@ def q_rollup_multires(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM intervals
     WINDOW w2 AS (PARTITION BY user_id ORDER BY seg_id)
     """,
-    tags=("temporal", "scd2"),
 )
 def q_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCD2 history construction: each user's event stream run-length
@@ -510,7 +501,6 @@ def q_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(list_reduce(vals, (a, b) -> 2e-1 * b + 8e-1 * a), 6) AS ema
     FROM per
     """,
-    tags=("temporal", "timeseries"),
 )
 def q_ema(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user exponential moving average of event value (α = 0.2) in
@@ -580,7 +570,6 @@ def q_ema(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM active a JOIN cohort c USING (user_id)
     GROUP BY 1, 2
     """,
-    tags=("temporal", "analytics"),
 )
 def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohort retention matrix: users bucketed by first-seen week, each
@@ -641,7 +630,6 @@ def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM seq WHERE prev IS NOT NULL
     GROUP BY 1, 2
     """,
-    tags=("temporal", "analytics"),
 )
 def q_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event-type transition matrix: counts of consecutive (prev →

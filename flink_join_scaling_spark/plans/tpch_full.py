@@ -84,7 +84,6 @@ _REV_E4_SQL = (
     ORDER BY s_acctbal DESC, n_name, s_name, p_partkey
     LIMIT 100
     """,
-    tags=("tpch",),
 )
 def q_tpch_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q2 shape (min-cost supplier): for each qualifying part, the
@@ -167,7 +166,6 @@ def q_tpch_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
                  / CAST(sum(rev_e4) AS DOUBLE), 6) AS mkt_share
     FROM t GROUP BY o_year
     """,
-    tags=("tpch",),
 )
 def q_tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8 shape (national market share): one nation's share of a
@@ -236,7 +234,6 @@ def q_tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1, 2
     """,
     headline=True,
-    tags=("tpch",),
 )
 def q_tpch_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q9 shape (product-type profit): profit by supplier nation
@@ -290,7 +287,6 @@ def q_tpch_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM pv, (SELECT sum(value_e4) AS t, count(*) AS c FROM pv) tot
     WHERE pv.value_e4 * tot.c > 2 * tot.t
     """,
-    tags=("tpch",),
 )
 def q_tpch_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q11 shape (important stock): per-part value restricted to
@@ -341,7 +337,6 @@ def q_tpch_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND l.l_shipdate > o.o_orderdate + INTERVAL 21 DAY
     GROUP BY 1
     """,
-    tags=("tpch",),
 )
 def q_tpch_q12_priority_class(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q12 shape (shipping-class priority split): per class (no
@@ -390,7 +385,6 @@ def q_tpch_q12_priority_class(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM sr JOIN supplier s ON s.s_suppkey = sr.suppkey
     WHERE sr.total_rev_e4 = (SELECT max(total_rev_e4) FROM sr)
     """,
-    tags=("tpch",),
 )
 def q_tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q15 shape (top supplier): per-supplier quarterly revenue,
@@ -434,7 +428,6 @@ def q_tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
           (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
     GROUP BY 1, 2, 3
     """,
-    tags=("tpch",),
 )
 def q_tpch_q16_supplier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q16 shape (supplier counts by part attributes): distinct
@@ -479,7 +472,6 @@ def q_tpch_q16_supplier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
        OR (p.p_brand = 'Brand#22' AND p.p_size BETWEEN 20 AND 50
            AND l.l_quantity BETWEEN 20 AND 40)
     """,
-    tags=("tpch",),
 )
 def q_tpch_q19_disjunctive_rev(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q19 shape (disjunctive predicate blocks): revenue over an
@@ -544,7 +536,6 @@ def q_tpch_q19_disjunctive_rev(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE r.r_name = 'AMERICA'
       AND s.s_suppkey IN (SELECT suppkey FROM sel)
     """,
-    tags=("tpch",),
 )
 def q_tpch_q20_excess_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q20 shape (nested semi-joins): suppliers in one region who
@@ -611,7 +602,6 @@ def q_tpch_q20_excess_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     LIMIT 20
     """,
     headline=True,
-    tags=("tpch",),
 )
 def q_tpch_q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q21 shape (suppliers who kept orders waiting): the
@@ -691,7 +681,6 @@ def q_tpch_q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
                         AND o.o_orderdate >= TIMESTAMP '1999-01-01')
     GROUP BY 1
     """,
-    tags=("tpch",),
 )
 def q_tpch_q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q22 shape (global sales opportunity): well-funded customers

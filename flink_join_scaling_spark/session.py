@@ -14,6 +14,31 @@ import os
 
 from pyspark.sql import SparkSession
 
+_SHM = "/dev/shm"
+#: spark.local.dir moves to ``_SHM`` only with at least this much free.
+_SHM_MIN_FREE_BYTES = 4 << 30
+#: Driver heap ceiling when ``$SPARK_GRAFT_DRIVER_MEM`` is unset.
+_DRIVER_MEM_MAX_GB = 16
+
+
+def _default_local_dir() -> str | None:
+    """A RAM-backed scratch dir when ``_SHM`` is writable and has room,
+    else None (Spark's default, ``/tmp``)."""
+    if not os.access(_SHM, os.W_OK):
+        return None
+    st = os.statvfs(_SHM)
+    if st.f_bavail * st.f_frsize < _SHM_MIN_FREE_BYTES:
+        return None
+    return os.path.join(_SHM, "fjss-spark-local")
+
+
+def _default_driver_memory() -> str:
+    """Half of physical RAM, at least 1g and at most
+    ``_DRIVER_MEM_MAX_GB``: the local-mode driver JVM is also every
+    executor, and the Python workers need the other half."""
+    ram_gb = (os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")) >> 30
+    return f"{max(1, min(_DRIVER_MEM_MAX_GB, ram_gb // 2))}g"
+
 
 def get_spark(
     app_name: str = "flink_join_scaling_spark",
@@ -45,14 +70,12 @@ def get_spark(
     # syscalls against the default /tmp (ext4-on-virtio here); a
     # RAM-backed dir removed that wait (measured same-session:
     # q_lm_bigram_hashed 2.11 → 1.89 s, q_dedup_minhash 3.28 → 2.45 s
-    # medians). Scale note: on YARN/K8s the resource manager OVERRIDES
+    # medians). The tmpfs is RAM, so it is used only with a few GB free.
+    # Scale note: on YARN/K8s the resource manager OVERRIDES
     # spark.local.dir with container-local dirs, so this default only
-    # governs local/standalone mode, where bench/test shuffle volumes
-    # are far below the tmpfs size; production standalone deployments
+    # governs local/standalone mode; production standalone deployments
     # point $SPARK_GRAFT_LOCAL_DIR at their NVMe scratch instead.
-    local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
-    if local_dir is None and os.access("/dev/shm", os.W_OK):
-        local_dir = "/dev/shm/fjss-spark-local"
+    local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR") or _default_local_dir()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -62,7 +85,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.streaming.noDataMicroBatches.enabled", "true")
     )

@@ -26,7 +26,7 @@ def main() -> None:
     ap.add_argument("names", nargs="+")
     args = ap.parse_args()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     spark = get_spark(
         app_name="fjss-dump-plans",
         cpus=cpus,

@@ -35,7 +35,7 @@ def main() -> None:
         print("usage: oracle_check.py q_name [q_name ...] | --all")
         raise SystemExit(2)
     spark = get_spark(app_name="fjss-oracle-check", cpus=int(
-        os.environ.get("SPARK_GRAFT_CPUS", "32")
+        os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))
     ))
     failures = []
     for name in names:

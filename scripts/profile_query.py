@@ -10,7 +10,7 @@ a browser. Usage:
     python scripts/profile_query.py q_dedup_minhash [q_... ...]
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-SPARK_GRAFT_CPUS (default 32).
+SPARK_GRAFT_CPUS (default: the CPUs this process may run on).
 """
 
 from __future__ import annotations
@@ -30,7 +30,7 @@ from flink_join_scaling_spark.session import get_spark  # noqa: E402
 def main() -> None:
     names = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     spark = get_spark(
         app_name="fjss-profile",
         cpus=cpus,

@@ -400,8 +400,8 @@ def test_bloom_bit_probe_matches_python(spark, bits, probes):
 
 
 def test_cosine_expr_vs_numpy_agree_on_current_fixtures(spark):
-    """The accepted ulp risk (plans/registry.FLOAT_BOUNDARY_SENSITIVE):
-    the JVM fold path (round(cosine_expr, 6)) and the NumPy pairwise
+    """The round-6 cosine ulp risk (functions/vectors.py): the JVM
+    fold path (round(cosine_expr, 6)) and the NumPy pairwise
     path (cosine6_pandas) must produce IDENTICAL round-6 values on the
     current embeddings fixtures — all pairs at the driver's comparison
     scale (sf0.01). If a regeneration ever lands a dot product within

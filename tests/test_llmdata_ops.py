@@ -1071,6 +1071,20 @@ def test_components_size_adaptive_handoff_at_exact_threshold(spark, monkeypatch)
     assert calls == [], "above-threshold graph must use the distributed path"
     assert at == above
 
+    # The gate counts RAW pairs: each pair repeated and reversed gives
+    # 2·36 = 72 > n_edges, although the deduped symmetrized edges (24)
+    # would fit the driver threshold.
+    dup_pairs = pairs.unionAll(pairs).unionAll(pairs.select("id_b", "id_a"))
+    calls.clear()
+    dup = {
+        (r.node, r.component_id)
+        for r in dd.connected_components(
+            dup_pairs, driver_threshold=n_edges
+        ).collect()
+    }
+    assert calls == [], "raw duplicate pairs must take the distributed path"
+    assert dup == at
+
 
 def test_container_majority_is_symmetric_on_unequal_lengths(spark):
     """Advisor r11: with the vote gated on doc_a's frame count alone,

@@ -11,11 +11,16 @@ to a cartesian product).
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
 from flink_join_scaling_spark import plans
+from flink_join_scaling_spark.plans import registry
 from tests.conftest import SF_SMALL
+
+REPO = Path(__file__).resolve().parent.parent
 
 
 def _plan(spark, name: str) -> str:
@@ -102,17 +107,35 @@ _QUADRATIC_OK = {
 
 
 def test_registry_rotation_sets_name_real_queries():
-    """The driver-ordering sets must only name registered queries — a
-    typo here silently drops a query from the rotation."""
-    from flink_join_scaling_spark.plans.registry import (
-        _DRIVER_GREEN,
-        _NEEDS_FRESH_ROW,
-    )
+    """``query_fns()`` lists every registered query once, in
+    registration order."""
+    assert list(plans.query_fns()) == list(plans.QUERIES)
 
-    assert _DRIVER_GREEN <= set(plans.QUERIES)
-    assert _NEEDS_FRESH_ROW <= set(plans.QUERIES)
-    # and every registered query appears exactly once in driver order
-    assert list(plans.query_fns()) and set(plans.query_fns()) == set(plans.QUERIES)
+
+def test_survey_counts_match_registry():
+    """SURVEY.md's §7 inventory line must state the registry's actual
+    counts — the doc-drift class the r8 verdict flagged (claimed 50
+    headline when the registry had 49)."""
+    import re
+
+    text = (REPO / "SURVEY.md").read_text()
+    m = re.search(r"(\d+) registered queries", text)
+    assert m and int(m.group(1)) == len(registry.QUERIES), (
+        f"SURVEY.md says {m and m.group(1)} registered queries; "
+        f"registry has {len(registry.QUERIES)}"
+    )
+    m = re.search(r"bench covers (\d+) headline queries", text)
+    headline = sum(1 for s in registry.QUERIES.values() if s.headline)
+    assert m and int(m.group(1)) == headline, (
+        f"SURVEY.md says {m and m.group(1)} headline queries; "
+        f"registry has {headline}"
+    )
+    readme = (REPO / "README.md").read_text()
+    m = re.search(r"(\d+) registered queries", readme)
+    assert m and int(m.group(1)) == len(registry.QUERIES), (
+        f"README.md says {m and m.group(1)} registered queries; "
+        f"registry has {len(registry.QUERIES)}"
+    )
 
 
 def test_oracle_keys_subset_of_queries():

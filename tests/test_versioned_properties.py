@@ -19,7 +19,6 @@ import pytest
 
 from flink_join_scaling_spark.operators.joins import (
     join_full_outer,
-    join_full_outer_cogroup,
     join_full_outer_seq,
     join_inner,
     join_left_outer,
@@ -149,20 +148,6 @@ def test_join_family_matches_oracle(spark, cfg, how):
     cols = ["x_id", "x_ts", "x_tag", "y_id", "y_ts", "ida", "y_tag"]
     got = _pairs([tuple(r[c] for c in cols) for r in res.collect()], a_cols=3)
     assert got == py_join(a, b, how)
-
-
-@pytest.mark.parametrize("cfg", CONFIGS)
-def test_cogroup_equals_composed_full_outer(spark, cfg):
-    """O6 via applyInPandas cogroup ≡ O6 via dedup+join composition."""
-    seed, n_a, n_b, n_ver, ida_max = cfg
-    a, b = gen_ab(seed, n_a, n_b, n_ver, ida_max)
-    dfa = spark.createDataFrame(a, A_SCHEMA)
-    dfb = spark.createDataFrame(b, B_SCHEMA)
-    composed = join_full_outer(dfa, dfb, "id", "ida", "id", "id", "ts", "ts")
-    cogrouped = join_full_outer_cogroup(dfa, dfb, "id", "ida", "id", "id", "ts", "ts")
-    cols = ["x_id", "x_ts", "x_tag", "y_id", "y_ts", "ida", "y_tag"]
-    as_set = lambda df: {tuple(r[c] for c in cols) for r in df.collect()}  # noqa: E731
-    assert as_set(composed) == as_set(cogrouped)
 
 
 def test_null_key_semantics(spark):
