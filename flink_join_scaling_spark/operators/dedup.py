@@ -1789,6 +1789,7 @@ def dedup_apply(
     score_col,
     id_a: str = "id_a",
     id_b: str = "id_b",
+    assume_pinned: bool = False,
 ) -> DataFrame:
     """Materialize the deduplicated corpus: every document except the
     non-keeper members of duplicate groups (keeper = highest
@@ -1800,11 +1801,13 @@ def dedup_apply(
     :func:`connected_components`) and reused for both the election and
     the loser list; the final step is a LEFT ANTI join of the corpus
     against the (pair-sized) loser set — the corpus shuffles once, and
-    only on its id."""
+    only on its id. ``assume_pinned`` is forwarded to
+    :func:`connected_components`: pass True when ``pairs`` already
+    reads from a checkpoint."""
     from pyspark.sql import Window
 
     comp, node_bound = connected_components(
-        pairs, id_a, id_b, with_bound=True
+        pairs, id_a, id_b, with_bound=True, assume_pinned=assume_pinned
     )
     score = F.col(score_col) if isinstance(score_col, str) else score_col
     members = comp.join(

@@ -3339,7 +3339,10 @@ def q_dedup_ensemble_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "lang", "source", "n_chars",
         tx.quality_score_raw(F.col("text")).alias("__q"),
     )
-    return dd.dedup_apply(docs, fused, "doc_id", "__q").drop("__q")
+    # both pair legs are eager localCheckpoints, so the union is pinned
+    return dd.dedup_apply(
+        docs, fused, "doc_id", "__q", assume_pinned=True
+    ).drop("__q")
 
 
 # ------------------------------------------- kNN label propagation

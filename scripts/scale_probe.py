@@ -513,8 +513,9 @@ def stream_semantic_skew_probe(spark) -> None:
 
 
 def main() -> None:
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     spark = get_spark(
-        app_name="fjss-scale-probe", cpus=32, shuffle_partitions=32,
+        app_name="fjss-scale-probe", cpus=cpus, shuffle_partitions=cpus,
         max_partition_bytes="8m",
     )
     if "--streaming-state" in sys.argv or os.environ.get(

@@ -43,8 +43,9 @@ def _totals(ui: str, app: str) -> dict:
 
 
 def main() -> None:
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     spark = get_spark(
-        app_name="fjss-shuffle-audit", cpus=32, shuffle_partitions=32,
+        app_name="fjss-shuffle-audit", cpus=cpus, shuffle_partitions=cpus,
         extra_conf={"spark.ui.enabled": "true"},
     )
     ui = spark.sparkContext.uiWebUrl

@@ -469,6 +469,27 @@ def test_dedup_keep_best_string_ids(spark):
     assert kept == ["doc-a", "y"]
 
 
+def test_dedup_apply_assume_pinned_matches_default(spark):
+    """A caller whose pair set already reads from a checkpoint skips
+    connected_components' own pin; the deduplicated corpus is the same."""
+    # planted groups {0..4} (a chain), {10, 11, 12} (a star, each edge
+    # also listed reversed) and {20, 21}; 30..34 are singletons
+    edges = [(0, 1), (1, 2), (2, 3), (3, 4), (10, 11), (10, 12), (11, 10),
+             (12, 10), (20, 21)]
+    q = {0: 0.5, 1: 0.9, 2: 0.9, 3: 0.1, 4: 0.2, 10: 0.3, 11: 0.3, 12: 0.1,
+         20: 0.4, 21: 0.8, **{i: 0.0 for i in range(30, 35)}}
+    docs = spark.createDataFrame(list(q.items()), "doc_id long, q double")
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long").localCheckpoint(eager=True)
+    default = sorted(r.doc_id for r in dd.dedup_apply(docs, pairs, "doc_id", "q").collect())
+    pinned = sorted(
+        r.doc_id
+        for r in dd.dedup_apply(docs, pairs, "doc_id", "q", assume_pinned=True).collect()
+    )
+    # keeper = highest q, ties to the lowest id
+    assert default == [1, 10, 21, *range(30, 35)]
+    assert pinned == default
+
+
 def test_ivf_cells_zero_norm_vector(spark):
     """Zero-norm vectors assign identically in the expression and
     pandas paths (regression: expression NULL vs NumPy NaN diverged):
