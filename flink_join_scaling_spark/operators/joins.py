@@ -193,17 +193,20 @@ def join_full_outer_seq(
     gy = dy.groupBy(*yk).agg(
         F.collect_list(F.struct(*[F.col(c) for c in dy.columns])).alias(ys_col)
     )
-    joined = gx.join(gy, on=_key_cond(xk, yk), how="full_outer")
-    key_expr = F.coalesce(*[F.col(a) for a in xk], *[F.col(b) for b in yk]) if len(
-        xk
-    ) == 1 else None
-    out = joined
-    if key_expr is not None:
-        out = out.withColumn(key_col, key_expr)
+    if xk == yk:
+        # same key names: a USING join, whose key columns are already
+        # coalesced across sides (unqualified refs would be ambiguous)
+        out = gx.join(gy, on=xk, how="full_outer")
+        key_cols = xk
+    else:
+        out = gx.join(gy, on=_key_cond(xk, yk), how="full_outer")
+        key_cols = xk + yk
+    if len(xk) == 1:
+        out = out.withColumn(key_col, F.coalesce(*[F.col(c) for c in key_cols]))
+        key_cols = [key_col]
     for c in (xs_col, ys_col):
         out = out.withColumn(c, F.coalesce(F.col(c), F.array().cast(out.schema[c].dataType)))
-    keep = ([key_col] if key_expr is not None else xk + yk) + [xs_col, ys_col]
-    return out.select(*keep)
+    return out.select(*key_cols, xs_col, ys_col)
 
 
 def join_inner(

@@ -5,16 +5,22 @@ The reference's engine: both inputs are unioned into
 operator; every arriving record triggers a re-dedup + re-emit of the
 key's full join result (``/root/reference/src/main/scala/flink_perf/
 joins.scala:10-23``, ``cogroupFunctions.scala:7-30``) — O(n²) work per
-key because the whole retained window is re-scanned per record.
+key because the whole retained window is re-scanned per record. All
+variants share that operator; only the final cogroup emission differs
+(``cogroupFunctions.scala:7-87``).
 
-Spark-native redesign: the same tagged union feeds
-``applyInPandasWithState`` with **per-side maps keyed by entity id
-holding only the current latest version** — so each micro-batch does
-O(touched keys × live ids) work, state is exactly compacted (the
-``VersioningEvictor``'s goal, minus its every-5th-record amortization
-and its Y-side bug, ``versionDeduplicator.scala:100``), and emission
-is the reference's changelog: the key's updated full join result
-whenever the key receives data.
+Spark-native redesign with the same split: ONE per-key state function
+serves the family, in one ``applyInPandasWithState`` whose state is
+**per-side maps keyed by entity id holding only the current latest
+version** — so each micro-batch does O(touched keys × live ids) work,
+and state is exactly compacted (the ``VersioningEvictor``'s goal,
+minus its every-5th-record amortization and its Y-side bug,
+``versionDeduplicator.scala:100``). A key that receives data emits
+``(k, xs_json, ys_json)``, JSON arrays of its latest versions per side
+by entity id: the grouped changelog (O8/O9) as it is. The exploded
+variants (O6/O7/O10) take their cross product from a stateless JVM
+``explode_outer`` of both arrays, which update mode allows after the
+stateful operator (Structured Streaming, SIGMOD 2018).
 
 Records are carried as JSON payloads so one processor serves any
 schema; callers wrap/unwrap with ``to_json``/``from_json``. At scale
@@ -45,14 +51,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-#: tagged-union shape both inputs are normalized to before the join
-UNION_SCHEMA = "k string, side long, id string, ts long, payload string"
-
-#: changelog output: one row per (x,y) pairing of the key's current state
-OUT_SCHEMA = "k string, x_payload string, y_payload string"
-
-#: grouped changelog output (O8/O9): one row per key, JSON arrays of
-#: the current latest versions per side
+#: output of the per-key state function, and the grouped changelog
+#: (O8/O9): one row per emitting key, JSON arrays of the current latest
+#: versions per side
 GROUPED_OUT_SCHEMA = "k string, xs_json string, ys_json string"
 
 #: per-key state: two JSON maps  id -> [ts, payload]  (one per side)
@@ -105,19 +106,14 @@ def _fold_latest(
     and the caller skips the O(state) serialize + store write.
 
     A plain loop over the columns as Python lists: a key's batch holds
-    a handful of rows, too few to repay pandas' per-call overhead."""
+    a handful of rows, too few to repay pandas' per-call overhead. The
+    rows come from :func:`tag_side`, so ``ts`` is never null."""
     changed = False
     for pdf in pdfs:
-        ts = pdf["ts"]
-        if ts.hasnans:
-            # defense for callers that bypass tag_side (which maps null
-            # ts to the sentinel JVM-side, so this branch is normally
-            # dead): a null ts ranks below every real version
-            ts = ts.astype("Int64").fillna(_TS_NULL_SENTINEL).astype("int64")
         for side, id_, t, payload in zip(
             pdf["side"].tolist(),
             pdf["id"].tolist(),
-            ts.tolist(),
+            pdf["ts"].tolist(),
             pdf["payload"].tolist(),
         ):
             m = xs if side == 0 else ys
@@ -128,14 +124,12 @@ def _fold_latest(
     return changed
 
 
-def _join_fn(how: str, ttl_ms: int | None = None):
-    """Per-key state function: fold arriving tagged rows into the two
-    id→latest maps (last-writer-wins on (ts, payload)), then emit the
-    key's full current join result:
-
-    - ``full_outer``  (O6): X-only → (x, null); Y-only → (null, y)
-    - ``left_outer``  (O7/O8 exploded): emit only if ≥1 X present
-    - ``inner``       (O10): emit only if both sides present
+def _join_fn(how: str, ttl_ms: int | None):
+    """The per-key state function of every variant: fold arriving
+    tagged rows into the two id→latest maps, write state only when a
+    map changed, then emit the key's ``(k, xs_json, ys_json)`` row,
+    entity ids ascending — except for a left variant's key without X
+    and an ``inner`` key with either side empty.
 
     With ``ttl_ms``, a key idle past the TTL is evicted (lazy, on the
     batch that fires its timeout) — see ``dedup.stream_dedup_latest``.
@@ -157,89 +151,47 @@ def _join_fn(how: str, ttl_ms: int | None = None):
             state.update(_dump_state(xs, ys))
         if ttl_ms is not None:
             state.setTimeoutDuration(ttl_ms)
-        k = key[0]
-        latest_x = [v[1] for v in xs.values()]
-        latest_y = [v[1] for v in ys.values()]
-        out: list[tuple] = []
-        if latest_x and latest_y:
-            out = [(k, x, y) for x in latest_x for y in latest_y]
-        elif latest_x and how != "inner":
-            out = [(k, x, None) for x in latest_x]
-        elif latest_y and how == "full_outer":
-            out = [(k, None, y) for y in latest_y]
-        if out:
-            yield pd.DataFrame(out, columns=["k", "x_payload", "y_payload"])
-
-    return fn
-
-
-def _grouped_join_fn(how: str):
-    """Per-key state fn for the grouped ("Seq") variants: same two
-    id→latest maps, but emission is ONE row per key carrying JSON
-    arrays of the current latest versions — the reference's
-    ``(X, Seq[Y])`` / ``(Seq[X], Seq[Y])`` shapes
-    (``cogroupFunctions.scala:50-73``) as a keyed changelog.
-
-    - ``full_outer_seq`` (O9): emit every touched key, either side
-      possibly empty.
-    - ``left_outer_seq`` (O8 grouped): emit only keys with ≥1 X.
-    """
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        xs: dict[str, list] = {}
-        ys: dict[str, list] = {}
-        if state.exists:
-            sx, sy = state.get
-            xs, ys = json.loads(sx), json.loads(sy)
-        changed = _fold_latest(xs, ys, pdfs)
-        if changed or not state.exists:
-            state.update(_dump_state(xs, ys))
-        if how == "left_outer_seq" and not xs:
+        if (how.startswith("left") and not xs) or (
+            how == "inner" and not (xs and ys)
+        ):
             return
-        # deterministic order: by entity id
-        latest_x = [xs[i][1] for i in sorted(xs)]
-        latest_y = [ys[i][1] for i in sorted(ys)]
+        xs_json = json.dumps([xs[i][1] for i in sorted(xs)])
+        ys_json = json.dumps([ys[i][1] for i in sorted(ys)])
         yield pd.DataFrame(
-            [(key[0], json.dumps(latest_x), json.dumps(latest_y))],
-            columns=["k", "xs_json", "ys_json"],
+            [(key[0], xs_json, ys_json)], columns=["k", "xs_json", "ys_json"]
         )
 
     return fn
 
 
 def _stateful_join(
-    union_subkeyed: DataFrame,
-    how: str,
-    grouped: bool,
-    ttl_ms: int | None,
+    sx: DataFrame, sy: DataFrame, key_x, key_y, id_x, id_y, ts_x, ts_y,
+    how: str, ttl_ms: int | None,
 ) -> DataFrame:
-    """The keyed stateful operator: the GroupState whole-map fold per
-    ``(k, __sub)`` group."""
-    g = union_subkeyed.groupBy("k", "__sub")
-    if grouped:
-        return g.applyInPandasWithState(
-            _grouped_join_fn(how),
-            outputStructType=GROUPED_OUT_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    return g.applyInPandasWithState(
+    """Tag and union both inputs, then run the one keyed stateful
+    operator per ``(k, __sub)`` group; returns the grouped changelog.
+
+    Left variants tag X with a constant id, so each key's X map holds
+    one entry: the key's latest X, as batch ``dedup_latest_by_key``
+    keeps (``versionDeduplicator.scala:13-19``)."""
+    if how.startswith("left"):
+        id_x = F.lit("")
+    union = tag_side(sx, key_x, id_x, ts_x, 0).unionByName(
+        tag_side(sy, key_y, id_y, ts_y, 1)
+    )
+    timeout = GroupStateTimeout.NoTimeout
+    if ttl_ms is not None:
+        timeout = GroupStateTimeout.ProcessingTimeTimeout
+    return _with_null_subkey(union, how).groupBy("k", "__sub").applyInPandasWithState(
         _join_fn(how, ttl_ms),
-        outputStructType=OUT_SCHEMA,
+        outputStructType=GROUPED_OUT_SCHEMA,
         stateStructType=_STATE_SCHEMA,
         outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if ttl_ms is not None
-            else GroupStateTimeout.NoTimeout
-        ),
+        timeoutConf=timeout,
     )
 
 
-def _with_null_subkey(union: DataFrame, how: str, grouped: bool) -> DataFrame:
+def _with_null_subkey(union: DataFrame, how: str) -> DataFrame:
     """Null-key handling, pinned to the batch family's SQL semantics:
     null join keys never match anything, but null-keyed rows are
     preserved outer-padded (dropped entirely where their side can't
@@ -249,19 +201,18 @@ def _with_null_subkey(union: DataFrame, how: str, grouped: bool) -> DataFrame:
     ``applyInPandasWithState`` ops in one streaming query): rows are
     grouped by ``(k, __sub)`` where ``__sub`` is '' for real keys and a
     per-(side, id) (exploded) or per-side (grouped) discriminator for
-    null keys. Each null-key state group then holds exactly one side, so
-    the ordinary emission logic produces the outer-padded rows — the
-    sides' null groups can never cross-join each other."""
+    null keys, so they never form one hot group. Each null-key group
+    holds one side, so the ordinary emission pads it: the sides' null
+    groups never cross-join."""
     if how == "inner":
         return union.where(F.col("k").isNotNull()).withColumn("__sub", F.lit(""))
     u = union
-    if how in ("left_outer", "left_outer_seq"):
+    if how.startswith("left"):
         u = u.where(F.col("k").isNotNull() | (F.col("side") == 0))
     sub_null = (
         F.col("side").cast("string")
-        if grouped
-        # concat_ws skips null ids: side 0 + null id → "0" (≠ "0:x" for
-        # any real id, and ≠ "0:" for the empty-string id)
+        if how.endswith("_seq")
+        # one group per (side, id); tag_side never leaves an id null
         else F.concat_ws(":", F.col("side"), F.col("id"))
     )
     return u.withColumn(
@@ -281,20 +232,19 @@ def stream_join_versioned_grouped(
     how: str = "full_outer_seq",
 ) -> DataFrame:
     """Streaming grouped versioned join (reference O8/O9 continuous):
-    changelog of (k, xs_json, ys_json) — per touched key, the JSON
-    arrays of current latest versions per side. Converged semantics
-    (last emission per key) equal batch ``join_full_outer_seq`` /
-    ``join_left_outer_seq``; one output row per key per micro-batch
-    instead of the exploded variant's cross product."""
+    the state function's changelog of (k, xs_json, ys_json) as it is —
+    per touched key, the JSON arrays of current latest versions per
+    side, ordered by entity id. One output row per key per micro-batch
+    instead of the exploded variant's cross product.
+
+    Converged semantics (last emission per key) equal batch
+    ``join_full_outer_seq`` / ``join_left_outer_seq``. For
+    ``left_outer_seq``, ``id_x`` is unused: a key keeps its latest X
+    only, as in batch; on equal ts the stream picks the X with the
+    greater payload JSON, which may differ from batch's pick."""
     if how not in ("full_outer_seq", "left_outer_seq"):
         raise ValueError(f"unsupported how={how!r}")
-    union = tag_side(sx, key_x, id_x, ts_x, 0).unionByName(
-        tag_side(sy, key_y, id_y, ts_y, 1)
-    )
-    return _stateful_join(
-        _with_null_subkey(union, how, grouped=True),
-        how, grouped=True, ttl_ms=None,
-    )
+    return _stateful_join(sx, sy, key_x, key_y, id_x, id_y, ts_x, ts_y, how, None)
 
 
 def stream_stream_join_within(
@@ -352,9 +302,18 @@ def stream_join_versioned(
     ttl_ms: int | None = None,
 ) -> DataFrame:
     """Streaming versioned join of two tagged streams; returns the
-    changelog DataFrame (k, x_payload, y_payload). Converged semantics
-    (last emission per key) equal the batch ``operators.joins``
-    counterparts; tests assert that equivalence.
+    changelog DataFrame (k, x_payload, y_payload): per touched key, the
+    null-padded cross product of its current latest versions. The
+    pairs come from the grouped changelog by a JVM-side
+    ``explode_outer`` of each side's JSON array, so the Python state
+    function emits one row per key whatever the product's size.
+
+    Converged semantics (last emission per key) equal the batch
+    ``operators.joins`` counterparts; tests assert that equivalence.
+    For ``left_outer``, ``id_x`` is unused: a key keeps its latest X
+    only, as batch ``join_left_outer`` does; on equal ts the stream
+    picks the X with the greater payload JSON, which may differ from
+    batch's pick.
 
     ``ttl_ms`` bounds join state by evicting keys idle past the TTL —
     this is where state actually grows (the repo's namesake concern);
@@ -364,13 +323,14 @@ def stream_join_versioned(
     """
     if how not in ("full_outer", "left_outer", "inner"):
         raise ValueError(f"unsupported how={how!r}")
-    union = tag_side(sx, key_x, id_x, ts_x, 0).unionByName(
-        tag_side(sy, key_y, id_y, ts_y, 1)
-    )
-    return _stateful_join(
-        _with_null_subkey(union, how, grouped=False),
-        how, grouped=False, ttl_ms=ttl_ms,
-    )
+    grouped = _stateful_join(sx, sy, key_x, key_y, id_x, id_y, ts_x, ts_y, how, ttl_ms)
+
+    def explode(col: str) -> F.Column:
+        return F.explode_outer(F.from_json(col, "array<string>"))
+
+    # one generator per select: X first, then Y
+    xs = grouped.select("k", explode("xs_json").alias("x_payload"), "ys_json")
+    return xs.select("k", "x_payload", explode("ys_json").alias("y_payload"))
 
 
 def stream_join_versioned_typed(

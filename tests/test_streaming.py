@@ -80,6 +80,31 @@ A_SCHEMA = "id long, ts long, tag string"
 B_SCHEMA = "id long, ts long, ida long, tag string"
 
 
+def _join_inputs(spark):
+    """The input shapes the stream-vs-batch join tests run, as
+    (A's key column, A, B): A keyed by its own id, so one A entity per
+    key; and A keyed by ``grp``, with 2 A and 3 B entities on each
+    shared key plus X-only and Y-only keys. The second shape has
+    distinct ts throughout, so stream and batch agree on a key's
+    latest X."""
+    yield (
+        "id",
+        spark.createDataFrame(_gen_a(6, 3), A_SCHEMA),
+        spark.createDataFrame(_gen_b(10, 3, ida_max=9), B_SCHEMA),
+    )
+    rng = random.Random(SEED + 2)
+    ts = iter(rng.sample(range(1_000_000), 14 * 3 + 15 * 3))
+    a = [(i, next(ts), i % 7, f"a{i}v{v}") for i in range(14) for v in range(3)]
+    b = [(i, next(ts), 3 + i % 5, f"b{i}v{v}") for i in range(15) for v in range(3)]
+    rng.shuffle(a)
+    rng.shuffle(b)
+    yield (
+        "grp",
+        spark.createDataFrame(a, "id long, ts long, grp long, tag string"),
+        spark.createDataFrame(b, B_SCHEMA),
+    )
+
+
 def test_stream_dedup_latest_matches_batch(streaming_spark, tmp_path):
     spark = streaming_spark
     df = spark.createDataFrame(_gen_a(7, 4), A_SCHEMA)
@@ -134,34 +159,32 @@ def test_stream_dedup_within_watermark_in_order(streaming_spark, tmp_path):
 @pytest.mark.parametrize("how", ["full_outer", "left_outer", "inner"])
 def test_stream_join_matches_batch(streaming_spark, tmp_path, how):
     spark = streaming_spark
-    a = spark.createDataFrame(_gen_a(6, 3), A_SCHEMA)
-    b = spark.createDataFrame(_gen_b(10, 3, ida_max=9), B_SCHEMA)
+    for key_a, a, b in _join_inputs(spark):
+        sa = chunked_parquet_stream(spark, a, str(tmp_path / key_a / "a"), n_chunks=3)
+        sb = chunked_parquet_stream(spark, b, str(tmp_path / key_a / "b"), n_chunks=3)
+        out = stream_join_versioned(
+            sa, sb, key_a, "ida", "id", "id", "ts", "ts", how=how
+        )
+        em = collect_emissions(out)
+        got = converged(em, ["k"])
+        # decode converged pairs (x_tag, y_tag); None = outer null padding
+        got_pairs = set()
+        for r in got.itertuples(index=False):
+            x = json.loads(r.x_payload)["tag"] if r.x_payload else None
+            y = json.loads(r.y_payload)["tag"] if r.y_payload else None
+            got_pairs.add((x, y))
 
-    sa = chunked_parquet_stream(spark, a, str(tmp_path / "a"), n_chunks=3)
-    sb = chunked_parquet_stream(spark, b, str(tmp_path / "b"), n_chunks=3)
-    out = stream_join_versioned(
-        sa, sb, "id", "ida", "id", "id", "ts", "ts", how=how
-    )
-    em = collect_emissions(out)
-    got = converged(em, ["k"])
-    # decode converged pairs (x_tag, y_tag); None = outer null padding
-    got_pairs = set()
-    for r in got.itertuples(index=False):
-        x = json.loads(r.x_payload)["tag"] if r.x_payload else None
-        y = json.loads(r.y_payload)["tag"] if r.y_payload else None
-        got_pairs.add((x, y))
-
-    if how == "full_outer":
-        batch = join_full_outer(a, b, "id", "ida", "id", "id", "ts", "ts")
-    elif how == "left_outer":
-        # batch O7 collapses left per *key*; here A ids are unique per key
-        # (id IS the key), so dedup-per-id == dedup-per-key
-        batch = join_left_outer(a, b, "id", "ida", "id", "ts", "ts")
-    else:
-        batch = join_inner(a, b, "id", "ida", "id", "id", "ts", "ts")
-    exp_pairs = {(r.x_tag, r.y_tag) for r in batch.collect()}
-    assert got_pairs == exp_pairs
-    assert len(em) >= len(got)  # changelog re-emission property
+        if how == "full_outer":
+            batch = join_full_outer(a, b, key_a, "ida", "id", "id", "ts", "ts")
+        elif how == "left_outer":
+            # batch O7 keeps one latest A per *key*: the "grp" shape
+            # checks the stream collapses a key's A entities the same way
+            batch = join_left_outer(a, b, key_a, "ida", "id", "ts", "ts")
+        else:
+            batch = join_inner(a, b, key_a, "ida", "id", "id", "ts", "ts")
+        exp_pairs = {(r.x_tag, r.y_tag) for r in batch.collect()}
+        assert got_pairs == exp_pairs, key_a
+        assert len(em) >= len(got)  # changelog re-emission property
 
 
 def test_stream_join_typed_structs_end_to_end(streaming_spark, tmp_path):
@@ -208,42 +231,42 @@ def test_stream_join_grouped_matches_batch(streaming_spark, tmp_path, how):
     from flink_join_scaling_spark.streaming import stream_join_versioned_grouped
 
     spark = streaming_spark
-    a = spark.createDataFrame(_gen_a(6, 3), A_SCHEMA)
-    b = spark.createDataFrame(_gen_b(10, 3, ida_max=9), B_SCHEMA)
-    sa = chunked_parquet_stream(spark, a, str(tmp_path / "a"), n_chunks=3)
-    sb = chunked_parquet_stream(spark, b, str(tmp_path / "b"), n_chunks=3)
-    em = collect_emissions(
-        stream_join_versioned_grouped(
-            sa, sb, "id", "ida", "id", "id", "ts", "ts", how=how
-        )
-    )
+
     def tags(arr_json: str) -> tuple:
         return tuple(sorted(json.loads(p)["tag"] for p in json.loads(arr_json)))
 
-    got = {
-        str(r.k): (tags(r.xs_json), tags(r.ys_json))
-        for r in converged(em, ["k"]).itertuples(index=False)
-    }
+    for key_a, a, b in _join_inputs(spark):
+        sa = chunked_parquet_stream(spark, a, str(tmp_path / key_a / "a"), n_chunks=3)
+        sb = chunked_parquet_stream(spark, b, str(tmp_path / key_a / "b"), n_chunks=3)
+        em = collect_emissions(
+            stream_join_versioned_grouped(
+                sa, sb, key_a, "ida", "id", "id", "ts", "ts", how=how
+            )
+        )
+        got = {
+            str(r.k): (tags(r.xs_json), tags(r.ys_json))
+            for r in converged(em, ["k"]).itertuples(index=False)
+        }
 
-    if how == "full_outer_seq":
-        batch = join_full_outer_seq(a, b, "id", "ida", "id", "id", "ts", "ts")
-        exp = {
-            str(r.key): (
-                tuple(sorted(x.tag for x in r.xs)),
-                tuple(sorted(y.tag for y in r.ys)),
-            )
-            for r in batch.collect()
-        }
-    else:
-        batch = join_left_outer_seq(a, b, "id", "ida", "id", "ts", "ts")
-        exp = {
-            str(r.id): (
-                (r.tag,),
-                tuple(sorted(y.tag for y in r.ys)),
-            )
-            for r in batch.collect()
-        }
-    assert got == exp
+        if how == "full_outer_seq":
+            batch = join_full_outer_seq(a, b, key_a, "ida", "id", "id", "ts", "ts")
+            exp = {
+                str(r.key): (
+                    tuple(sorted(x.tag for x in r.xs)),
+                    tuple(sorted(y.tag for y in r.ys)),
+                )
+                for r in batch.collect()
+            }
+        else:
+            batch = join_left_outer_seq(a, b, key_a, "ida", "id", "ts", "ts")
+            exp = {
+                str(r[key_a]): (
+                    (r.tag,),
+                    tuple(sorted(y.tag for y in r.ys)),
+                )
+                for r in batch.collect()
+            }
+        assert got == exp, key_a
 
 
 def test_stream_join_null_keys_match_batch(streaming_spark, tmp_path):
@@ -782,8 +805,8 @@ def test_stream_scd2_dropped_count_dedupes_within_batch(streaming_spark, tmp_pat
 
 
 def test_fold_latest_last_writer_wins():
-    """The per-key fold keeps the max (ts, payload) per (side, id),
-    reports whether any entry changed, and ranks a null ts lowest."""
+    """The per-key fold keeps the max (ts, payload) per (side, id) and
+    reports whether any entry changed."""
     from flink_join_scaling_spark.streaming.joins import _fold_latest
 
     xs, ys = {"1": [5, "b"]}, {}
@@ -794,8 +817,3 @@ def test_fold_latest_last_writer_wins():
     assert not _fold_latest(xs, dict(), iter([batch.iloc[:2]]))  # stale for xs
     assert _fold_latest(xs, ys, iter([batch.iloc[:1], batch.iloc[1:]]))
     assert xs == {"1": [5, "b"]} and ys == {"7": [3, "q"]}
-    nulls = pd.DataFrame(
-        {"side": [0, 0], "id": ["2", "3"], "ts": [float("nan"), 1.0], "payload": ["n", "m"]}
-    )
-    assert _fold_latest(xs, ys, iter([nulls]))
-    assert xs["2"] == [-(1 << 63), "n"] and xs["3"] == [1, "m"]

@@ -200,3 +200,12 @@ def test_grouped_variants_conserve_elements(spark, cfg):
     assert sum(len(r["ys"]) for r in foj) == len(db)
     keys = {r["key"] for r in foj}
     assert keys == {r[0] for r in py_dedup(a, (0,), 1)} | {r[2] for r in db}
+
+    # both key columns named ``k``: same elements, no ambiguous reference
+    fk = join_full_outer_seq(
+        dfa.withColumnRenamed("id", "k"), dfb.withColumnRenamed("ida", "k"),
+        "k", "k", "k", "id", "ts", "ts",
+    ).collect()
+    assert sum(len(r["xs"]) for r in fk) == n_da
+    assert sum(len(r["ys"]) for r in fk) == len(db)
+    assert {r["key"] for r in fk} == keys
