@@ -23,6 +23,21 @@ aggregation applies, and the join then moves one row per key rather
 than one per record. Continuous (per-record-trigger) semantics live in
 ``flink_join_scaling_spark.streaming`` as micro-batch changelogs.
 
+One key rule
+------------
+All five operators join through ``_joined``, as each reference variant
+is one keyed cogroup with one key extractor per side: ``x_key`` and
+``y_key`` are a name or equal-length name lists, and x key *i* matches
+y key *i* by position whatever the names (equal, permuted, partly
+shared, disjoint; x may be y). Output columns, whatever the key names:
+
+- O6/O7/O10: x's columns, then y's; a name on both sides gets its
+  side's prefix (``x_``/``y_`` by default), so both key columns appear.
+- O8 ``join_left_outer_seq``: x's columns in x's order, then ``seq_col``.
+- O9 ``join_full_outer_seq``: one coalesced key column per key position
+  (``key_col`` for a single key, x's key names for a composite key),
+  then ``xs_col`` and ``ys_col``.
+
 Known reference divergences, intentional:
 - The reference dedups per id *within* a key's window state, so an
   entity whose key changed between versions would linger under its old
@@ -46,7 +61,9 @@ Known reference divergences, intentional:
 
 from __future__ import annotations
 
+import operator
 from collections.abc import Sequence
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -58,41 +75,39 @@ from flink_join_scaling_spark.operators.versioned import (
 )
 
 
-def _disambiguate(
-    x: DataFrame, y: DataFrame, x_prefix: str, y_prefix: str
-) -> tuple[DataFrame, DataFrame, dict[str, str], dict[str, str]]:
-    """Prefix-rename any output columns whose names collide across sides."""
-    common = set(x.columns) & set(y.columns)
-    x_map = {c: (x_prefix + c if c in common else c) for c in x.columns}
-    y_map = {c: (y_prefix + c if c in common else c) for c in y.columns}
-    x2 = x.select([F.col(c).alias(n) for c, n in x_map.items()])
-    y2 = y.select([F.col(c).alias(n) for c, n in y_map.items()])
-    return x2, y2, x_map, y_map
-
-
-def _key_cond(xk: list[str], yk: list[str]) -> F.Column:
-    cond = None
-    for a, b in zip(xk, yk):
-        c = F.col(a) == F.col(b)
-        cond = c if cond is None else (cond & c)
-    return cond
-
-
 def _joined(
     x: DataFrame,
     y: DataFrame,
     x_key: str | Sequence[str],
     y_key: str | Sequence[str],
     how: str,
-    x_prefix: str,
-    y_prefix: str,
-    broadcast_right: bool = False,
-) -> DataFrame:
-    x2, y2, x_map, y_map = _disambiguate(x, y, x_prefix, y_prefix)
-    xk = [x_map[k] for k in _as_list(x_key)]
-    yk = [y_map[k] for k in _as_list(y_key)]
-    right = F.broadcast(y2) if broadcast_right else y2
-    return x2.join(right, on=_key_cond(xk, yk), how=how)
+    x_prefix: str = "x_",
+    y_prefix: str = "y_",
+) -> tuple[DataFrame, dict[str, str], dict[str, str]]:
+    """Join x to y on x key *i* == y key *i*, after prefixing the column
+    names that collide across sides. Returns the joined frame and each
+    side's input-name -> output-name map."""
+    common = set(x.columns) & set(y.columns)
+    x_map = {c: (x_prefix + c if c in common else c) for c in x.columns}
+    y_map = {c: (y_prefix + c if c in common else c) for c in y.columns}
+    if common:  # each extra projection costs a driver-side analysis
+        x = x.select([F.col(c).alias(n) for c, n in x_map.items()])
+        y = y.select([F.col(c).alias(n) for c, n in y_map.items()])
+    pairs = zip(_as_list(x_key), _as_list(y_key), strict=True)
+    cond = reduce(operator.and_, [F.col(x_map[a]) == F.col(y_map[b]) for a, b in pairs])
+    return x.join(y, on=cond, how=how), x_map, y_map
+
+
+def _grouped(df: DataFrame, key: str | Sequence[str], list_col: str) -> DataFrame:
+    """One row per key: the key columns and ``list_col``, the array of
+    the key's rows as structs."""
+    rows = F.collect_list(F.struct(*[F.col(c) for c in df.columns]))
+    return df.groupBy(*_as_list(key)).agg(rows.alias(list_col))
+
+
+def _or_empty(df: DataFrame, col: str) -> F.Column:
+    """``col`` with null (an unmatched key) replaced by an empty array."""
+    return F.coalesce(F.col(col), F.array().cast(df.schema[col].dataType))
 
 
 def join_full_outer(
@@ -112,7 +127,7 @@ def join_full_outer(
     precisely SQL FULL OUTER JOIN on the key."""
     dx = dedup_latest(x, x_id, x_ts)
     dy = dedup_latest(y, y_id, y_ts)
-    return _joined(dx, dy, x_key, y_key, "full_outer", x_prefix, y_prefix)
+    return _joined(dx, dy, x_key, y_key, "full_outer", x_prefix, y_prefix)[0]
 
 
 def join_left_outer(
@@ -125,13 +140,12 @@ def join_left_outer(
     y_ts: str,
     x_prefix: str = "x_",
     y_prefix: str = "y_",
-    broadcast_right: bool = False,
 ) -> DataFrame:
     """O7 ``JoinLeftOuter`` (``joins.scala:24-37``): one latest X per
     *key* joined to each latest-per-id Y; right-only keys dropped."""
     dx = dedup_latest_by_key(x, x_key, x_ts)
     dy = dedup_latest(y, y_id, y_ts)
-    return _joined(dx, dy, x_key, y_key, "left_outer", x_prefix, y_prefix, broadcast_right)
+    return _joined(dx, dy, x_key, y_key, "left_outer", x_prefix, y_prefix)[0]
 
 
 def join_left_outer_seq(
@@ -144,27 +158,21 @@ def join_left_outer_seq(
     y_ts: str,
     seq_col: str = "ys",
 ) -> DataFrame:
-    """O8 ``JoinLeftOuterSeq`` (``joins.scala:39-54``): emits one row per
-    left entity with an array of current right versions; empty array
-    (never null) when unmatched — matching ``cogroupFunctions.scala:50-62``.
-
-    The right side is pre-aggregated to one array row per key *before*
-    the join, so the shuffle moves one row per key and the left join is
-    1:1 — no row explosion, and Catalyst may broadcast the aggregated
-    side if small.
+    """O8 ``JoinLeftOuterSeq`` (``joins.scala:39-54``), the reference's
+    ``(X, Seq[Y])``: x's columns in x's order (one latest X per key),
+    then ``seq_col``, the array of the key's latest-per-id Y rows as
+    structs; empty (never null) when unmatched, as in
+    ``cogroupFunctions.scala:50-62``. Y is grouped to one array row per
+    key *before* the join, so the left join is 1:1 and Catalyst may
+    broadcast the grouped side if small.
     """
     dx = dedup_latest_by_key(x, x_key, x_ts)
-    dy = dedup_latest(y, y_id, y_ts)
-    yk = _as_list(y_key)
-    grouped = dy.groupBy(*yk).agg(
-        F.collect_list(F.struct(*[F.col(c) for c in dy.columns])).alias(seq_col)
+    gy = _grouped(dedup_latest(y, y_id, y_ts), y_key, seq_col)
+    out, x_map, y_map = _joined(dx, gy, x_key, y_key, "left_outer")
+    return out.select(
+        *[F.col(x_map[c]).alias(c) for c in dx.columns],
+        _or_empty(out, y_map[seq_col]).alias(seq_col),
     )
-    xk = _as_list(x_key)
-    joined = dx.join(grouped, on=_key_cond(xk, yk), how="left_outer") if set(xk) != set(
-        yk
-    ) else dx.join(grouped, on=xk, how="left_outer")
-    empty = F.array().cast(joined.schema[seq_col].dataType)
-    return joined.withColumn(seq_col, F.coalesce(F.col(seq_col), empty))
 
 
 def join_full_outer_seq(
@@ -181,32 +189,23 @@ def join_full_outer_seq(
     ys_col: str = "ys",
 ) -> DataFrame:
     """O9 ``JoinFullOuterSeq`` (``joins.scala:56-70``): per key emit
-    ``(Seq[X], Seq[Y])`` of latest-per-id versions, either side possibly
-    empty (``cogroupFunctions.scala:64-73``). Composition: two grouped
-    aggregations full-outer-joined on the key; arrays coalesced to []."""
-    dx = dedup_latest(x, x_id, x_ts)
-    dy = dedup_latest(y, y_id, y_ts)
+    ``(Seq[X], Seq[Y])`` of latest-per-id versions as structs, either
+    side possibly empty (``cogroupFunctions.scala:64-73``). Output: one
+    key column per key position, whichever side's key is present
+    (``key_col`` for a single key, x's key names for a composite key),
+    then ``xs_col`` and ``ys_col``, never null. Composition: each side
+    grouped to one array row per key, full-outer-joined on the key.
+    """
     xk, yk = _as_list(x_key), _as_list(y_key)
-    gx = dx.groupBy(*xk).agg(
-        F.collect_list(F.struct(*[F.col(c) for c in dx.columns])).alias(xs_col)
+    gx = _grouped(dedup_latest(x, x_id, x_ts), xk, xs_col)
+    gy = _grouped(dedup_latest(y, y_id, y_ts), yk, ys_col)
+    out, x_map, y_map = _joined(gx, gy, xk, yk, "full_outer")
+    names = [key_col] if len(xk) == 1 else xk
+    return out.select(
+        *[F.coalesce(F.col(x_map[a]), F.col(y_map[b])).alias(n) for a, b, n in zip(xk, yk, names)],
+        _or_empty(out, x_map[xs_col]).alias(xs_col),
+        _or_empty(out, y_map[ys_col]).alias(ys_col),
     )
-    gy = dy.groupBy(*yk).agg(
-        F.collect_list(F.struct(*[F.col(c) for c in dy.columns])).alias(ys_col)
-    )
-    if xk == yk:
-        # same key names: a USING join, whose key columns are already
-        # coalesced across sides (unqualified refs would be ambiguous)
-        out = gx.join(gy, on=xk, how="full_outer")
-        key_cols = xk
-    else:
-        out = gx.join(gy, on=_key_cond(xk, yk), how="full_outer")
-        key_cols = xk + yk
-    if len(xk) == 1:
-        out = out.withColumn(key_col, F.coalesce(*[F.col(c) for c in key_cols]))
-        key_cols = [key_col]
-    for c in (xs_col, ys_col):
-        out = out.withColumn(c, F.coalesce(F.col(c), F.array().cast(out.schema[c].dataType)))
-    return out.select(*key_cols, xs_col, ys_col)
 
 
 def join_inner(
@@ -220,11 +219,10 @@ def join_inner(
     y_ts: str,
     x_prefix: str = "x_",
     y_prefix: str = "y_",
-    broadcast_right: bool = False,
 ) -> DataFrame:
     """O10 ``cgfInner`` (``cogroupFunctions.scala:74-87`` — dead code in
     the reference, live here): latest-per-id cross product when both
     sides are present."""
     dx = dedup_latest(x, x_id, x_ts)
     dy = dedup_latest(y, y_id, y_ts)
-    return _joined(dx, dy, x_key, y_key, "inner", x_prefix, y_prefix, broadcast_right)
+    return _joined(dx, dy, x_key, y_key, "inner", x_prefix, y_prefix)[0]

@@ -216,18 +216,11 @@ def q_join_full_outer_seq(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O10 (dead code in the reference, live here): inner versioned join;
-    nation is a broadcastable dim."""
+    nation is far under the broadcast threshold, so Catalyst broadcasts
+    it unhinted (tests/test_plans.py::test_dim_join_broadcasts)."""
     s = load_table(spark, sf_dir, "supplier")
     n = load_table(spark, sf_dir, "nation")
     out = join_inner(
-        s,
-        n,
-        "s_nationkey",
-        "n_nationkey",
-        "s_suppkey",
-        "n_nationkey",
-        "s_acctbal",
-        "n_regionkey",
-        broadcast_right=True,
+        s, n, "s_nationkey", "n_nationkey", "s_suppkey", "n_nationkey", "s_acctbal", "n_regionkey"
     )
     return out.select("s_suppkey", "s_name", "s_acctbal", "n_nationkey", "n_name", "n_regionkey")

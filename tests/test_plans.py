@@ -47,6 +47,54 @@ def test_full_outer_join_is_shuffle_join(spark):
     assert "SortMergeJoin" in plan and "FullOuter" in plan
 
 
+#: shuffle exchanges in the planned (pre-AQE) physical plan of each op
+#: the batch benchmark times (``perfbench/wl_batch.py::OPS``), called
+#: as it calls them. Each join's dedup already hash-partitions its side
+#: on ``id``, so a join or grouping on ``id`` adds no exchange; the left
+#: ops broadcast their right side at this size.
+BENCH_OP_SHUFFLES = {
+    "dedup_latest": 1,  # by id
+    "join_full_outer": 3,  # A by id, B by id, B by ida
+    "join_left_outer": 2,  # A by id, B by id
+    "join_left_outer_seq": 3,  # B by id, C by id, C's groups by idb
+    "join_full_outer_seq": 3,  # A by id, B by id, B's groups by ida
+}
+
+
+@pytest.fixture(scope="module")
+def bench_inputs(spark, tmp_path_factory):
+    """The batch benchmark's OPS and a small copy of its A/B/C parquet."""
+    import json
+    import sys
+
+    sys.path.insert(0, str(REPO / "perfbench"))
+    try:
+        import gen
+        import wl_batch
+    finally:
+        sys.path.remove(str(REPO / "perfbench"))
+    params = json.loads((REPO / "perfbench" / "params.json").read_text())
+    p = params["workloads"]["batch_versioned_join"]
+    out = tmp_path_factory.mktemp("bench_inputs")
+    for name, table in gen.versioned_hierarchy(7, **{**p["shape"], "n_a": 500}).items():
+        gen.write_parquet(table, str(out / name), parts=p["files_per_table"])
+    return wl_batch.OPS, lambda t: spark.read.parquet(str(out / t))
+
+
+@pytest.mark.parametrize("op", list(BENCH_OP_SHUFFLES))
+def test_bench_op_shuffle_count(bench_inputs, op):
+    """A refactor of the batch family must not add a shuffle to a timed
+    op (``dedup_latest``'s exchange reuse included) without this
+    failing."""
+    import re
+
+    ops, read = bench_inputs
+    assert set(ops) == set(BENCH_OP_SHUFFLES)
+    tabs, fn, _ = ops[op]
+    plan = fn(*[read(t) for t in tabs])._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"\bExchange ", plan)) == BENCH_OP_SHUFFLES[op], plan
+
+
 def test_agg_has_partial_aggregation(spark):
     plan = _plan(spark, "q_agg_group")
     assert "partial" in plan  # map-side combine before the exchange

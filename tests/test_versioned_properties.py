@@ -16,6 +16,7 @@ from __future__ import annotations
 import random
 
 import pytest
+from pyspark.sql import functions as F
 
 from flink_join_scaling_spark.operators.joins import (
     join_full_outer,
@@ -130,24 +131,102 @@ def _pairs(rows, a_cols=3):
     return out
 
 
-@pytest.mark.parametrize("cfg", CONFIGS)
-@pytest.mark.parametrize("how", ["full_outer", "left_outer", "inner"])
+def py_group(pairs, group_of) -> dict:
+    """``py_join``'s pairs collected per group into (xs, ys) sets: the
+    rows of the Seq variants (``cogroupFunctions.scala:50-73``)."""
+    out: dict = {}
+    for x, y in pairs:
+        xs, ys = out.setdefault(group_of(x, y), (set(), set()))
+        xs.update([x] if x else [])
+        ys.update([y] if y else [])
+    return {g: (frozenset(xs), frozenset(ys)) for g, (xs, ys) in out.items()}
+
+
+#: composite key shapes, (x key names, y key names): x's key is
+#: (id, id + 100) and y's (ida, ida + 100), matched by position, so the
+#: oracle's id == ida match holds whatever the names
+KEY_SHAPES = {
+    "equal": (["k", "j"], ["k", "j"]),
+    "permuted": (["k", "j"], ["j", "k"]),
+    "overlap": (["k", "a"], ["k", "b"]),
+    "disjoint": (["k", "a"], ["m", "b"]),
+}
+#: CONFIGS with the single key id/ida, then the key shapes on CONFIGS[0]
+#: and a self-join: B to the B entities whose ida is its id
+JOIN_CASES = CONFIGS + [pytest.param((*CONFIGS[0], s), id=s) for s in [*KEY_SHAPES, "self"]]
+A_FIELDS = ["id", "ts", "tag"]
+B_FIELDS = ["id", "ts", "ida", "tag"]
+
+
+def _pick(row: dict, fields: list[str]):
+    """An output row's side as the oracle tuple; None when null-padded."""
+    return None if row["id"] is None else tuple(row[f] for f in fields)
+
+
+@pytest.mark.parametrize("cfg", JOIN_CASES)
+@pytest.mark.parametrize(
+    "how", ["full_outer", "left_outer", "inner", "left_outer_seq", "full_outer_seq"]
+)
 def test_join_family_matches_oracle(spark, cfg, how):
-    seed, n_a, n_b, n_ver, ida_max = cfg
+    seed, n_a, n_b, n_ver, ida_max, *shape = cfg
     a, b = gen_ab(seed, n_a, n_b, n_ver, ida_max)
     dfa = spark.createDataFrame(a, A_SCHEMA)
     dfb = spark.createDataFrame(b, B_SCHEMA)
+    xk, yk, a_fields = "id", "ida", A_FIELDS
+    if shape == ["self"]:
+        a, dfa, a_fields = b, dfb, B_FIELDS
+    elif shape:
+        xk, yk = KEY_SHAPES[shape[0]]
+        dfa = dfa.withColumn(xk[0], F.col("id")).withColumn(xk[1], F.col("id") + 100)
+        dfb = dfb.withColumn(yk[0], F.col("ida")).withColumn(yk[1], F.col("ida") + 100)
+    # A ids are unique per key (id IS the key) → the left ops' per-key
+    # collapse equals per-id dedup, so the oracle applies unchanged
     if how == "full_outer":
-        res = join_full_outer(dfa, dfb, "id", "ida", "id", "id", "ts", "ts")
-    elif how == "left_outer":
-        # A ids are unique per key (id IS the key) → per-key collapse
-        # equals per-id dedup, so the oracle applies unchanged
-        res = join_left_outer(dfa, dfb, "id", "ida", "id", "ts", "ts")
+        res = join_full_outer(dfa, dfb, xk, yk, "id", "id", "ts", "ts")
+    elif how in ("left_outer", "left_outer_seq"):
+        op = join_left_outer if how == "left_outer" else join_left_outer_seq
+        res = op(dfa, dfb, xk, yk, "id", "ts", "ts")
+    elif how == "inner":
+        res = join_inner(dfa, dfb, xk, yk, "id", "id", "ts", "ts")
     else:
-        res = join_inner(dfa, dfb, "id", "ida", "id", "id", "ts", "ts")
-    cols = ["x_id", "x_ts", "x_tag", "y_id", "y_ts", "ida", "y_tag"]
-    got = _pairs([tuple(r[c] for c in cols) for r in res.collect()], a_cols=3)
-    assert got == py_join(a, b, how)
+        res = join_full_outer_seq(dfa, dfb, xk, yk, "id", "id", "ts", "ts")
+    rows = res.collect()
+
+    if how == "left_outer_seq":
+        assert res.columns == [*dfa.columns, "ys"]
+        got = {
+            _pick(r, a_fields): frozenset(_pick(s, B_FIELDS) for s in r["ys"]) for r in rows
+        }
+        exp = py_group(py_join(a, b, "left_outer"), lambda x, y: x)
+        assert len(rows) == len(got)
+        assert got == {x: ys for x, (_, ys) in exp.items()}
+    elif how == "full_outer_seq":
+        key_cols = ["key"] if isinstance(xk, str) else xk
+        assert res.columns == [*key_cols, "xs", "ys"]
+        got = {
+            tuple(r[c] for c in key_cols): (
+                frozenset(_pick(s, a_fields) for s in r["xs"]),
+                frozenset(_pick(s, B_FIELDS) for s in r["ys"]),
+            )
+            for r in rows
+        }
+        k_of = (lambda k: (k,)) if isinstance(xk, str) else (lambda k: (k, k + 100))
+        assert len(rows) == len(got)
+        assert got == py_group(
+            py_join(a, b, "full_outer"), lambda x, y: k_of(x[0] if x else y[2])
+        )
+    else:
+        nx = len(dfa.columns)
+        assert len(res.columns) == nx + len(dfb.columns)
+        got = {
+            (
+                _pick(dict(zip(dfa.columns, r[:nx])), a_fields),
+                _pick(dict(zip(dfb.columns, r[nx:])), B_FIELDS),
+            )
+            for r in rows
+        }
+        assert len(rows) == len(got)
+        assert got == py_join(a, b, how)
 
 
 def test_null_key_semantics(spark):
