@@ -86,10 +86,21 @@ def _joined(
 ) -> tuple[DataFrame, dict[str, str], dict[str, str]]:
     """Join x to y on x key *i* == y key *i*, after prefixing the column
     names that collide across sides. Returns the joined frame and each
-    side's input-name -> output-name map."""
+    side's input-name -> output-name map. Raises ``ValueError`` when a
+    prefixed name is already taken (x ``id`` -> ``x_id`` beside x's own
+    ``x_id``)."""
     common = set(x.columns) & set(y.columns)
     x_map = {c: (x_prefix + c if c in common else c) for c in x.columns}
     y_map = {c: (y_prefix + c if c in common else c) for c in y.columns}
+    taken: dict[str, str] = {}
+    for side, m in (("x", x_map), ("y", y_map)):
+        for c, n in m.items():
+            if n in taken:
+                raise ValueError(
+                    f"join output column {n!r} would come from {taken[n]} and "
+                    f"{side}.{c}; rename one or pass another x_prefix/y_prefix"
+                )
+            taken[n] = f"{side}.{c}"
     if common:  # each extra projection costs a driver-side analysis
         x = x.select([F.col(c).alias(n) for c, n in x_map.items()])
         y = y.select([F.col(c).alias(n) for c, n in y_map.items()])

@@ -1,6 +1,5 @@
 from flink_join_scaling_spark.plans.registry import (  # noqa: F401
     QUERIES,
-    headline_queries,
     oracle_sqls,
     query_fns,
 )

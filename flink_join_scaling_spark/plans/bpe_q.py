@@ -125,7 +125,6 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
            coalesce(c.n_bpe, CAST(0 AS BIGINT)) AS n_bpe_tokens
     FROM documents d LEFT JOIN dcnt c ON d.doc_id = c.doc_id
     """,
-    headline=True,
 )
 def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train-then-encode end to end: per-document pre-token and
@@ -185,7 +184,6 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents d LEFT JOIN dcnt c ON d.doc_id = c.doc_id
     GROUP BY d.source
     """,
-    headline=True,
 )
 def q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TRAINED-tokenizer fertility by source: BPE tokens per pre-token

@@ -275,7 +275,6 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM documents d JOIN feat t ON t.doc_id = d.doc_id, w{_LR_ITERS} w
     ) t WHERE t.z >= 0
     """,
-    headline=True,
 )
 def q_quality_classifier_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Model-filtered corpus: every document the trained classifier

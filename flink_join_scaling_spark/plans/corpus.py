@@ -610,7 +610,6 @@ def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_lm_score",
-    headline=True,
     oracle=f"""
     WITH {_TOKS_CTE},
     tf AS (
@@ -899,7 +898,6 @@ def _lm2h_bucket_duck(sql_expr: str, width: int) -> str:
                  / CAST(n_bigrams AS DOUBLE), 6) AS lm2h_logprob
     FROM per
     """,
-    headline=True,
 )
 def q_lm_bigram_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hashed-feature interpolated bigram LM — q_lm_bigram's scoring
@@ -1140,7 +1138,6 @@ def q_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM cum
     GROUP BY 1, 2
     """,
-    headline=True,
 )
 def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composed curation pipeline, end to end in ONE plan: quality
@@ -1320,7 +1317,6 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_collocations",
-    headline=True,
     oracle=f"""
     WITH {_TOKS_CTE},
     bi AS (
@@ -1410,7 +1406,6 @@ def q_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_source_overlap",
-    headline=True,
     oracle=f"""
     WITH {_SHINGLE_CTE},
     ssh AS (
@@ -1570,7 +1565,6 @@ _HH_THETA = 200  # report tokens with count > total/200
 
 @query(
     "q_heavy_hitters",
-    headline=True,
     oracle=f"""
     WITH {{toks}},
     tot AS (SELECT count(*) AS n FROM words),

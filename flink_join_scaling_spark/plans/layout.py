@@ -151,7 +151,6 @@ def _bloom_oracle() -> str:
 
 @query(
     "q_join_bloom_reduced",
-    headline=True,
     oracle=_bloom_oracle(),
 )
 def q_join_bloom_reduced(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -258,7 +257,6 @@ _NORM_DUCK = r"regexp_replace(lower(trim(text)), '\s+', ' ', 'g')"
 
 @query(
     "q_split_leakage_safe",
-    headline=True,
     oracle=f"""
     WITH h AS (SELECT doc_id, source, sha256({_NORM_DUCK}) AS th
                FROM documents),
@@ -352,7 +350,6 @@ def _z_value_duck(x: str, y: str) -> str:
 
 @query(
     "q_zorder_layout",
-    headline=True,
     oracle=f"""
     WITH e AS (SELECT CAST(user_id % 256 AS BIGINT) AS x,
                       CAST((epoch_us(CAST(ts AS TIMESTAMP)) // 60000000) % 256

@@ -83,7 +83,6 @@ def _dot_sql(a: str, b: str) -> str:
            round(length(replace(t, ' ', '')) / len(string_split(t, ' ')), 4) AS avg_wlen
     FROM norm
     """,
-    headline=True,
 )
 def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -301,7 +300,6 @@ from flink_join_scaling_spark.operators.classifier import (  # noqa: E402
             AND ok_alpha_words AND ok_stopwords AND ok_repetition) AS keep
     FROM rules
     """,
-    headline=True,
 )
 def q_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher quality-rule battery (Rae et al. 2021 §A1.1, the
@@ -382,7 +380,6 @@ _CHUNK, _STRIDE = 64, 48
     FROM spans
     WHERE least({_CHUNK}, len(ws) - s) > 0
     """,
-    headline=True,
 )
 def q_text_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Overlapping token-window chunking (64-token windows, stride 48)
@@ -405,7 +402,6 @@ def q_text_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents
     GROUP BY 1
     """,
-    headline=True,
 )
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -500,7 +496,7 @@ def _minhash_oracle() -> str:
     return f"WITH {_minhash_ctes()} SELECT id_a, id_b, jaccard FROM mh_pairs"
 
 
-@query("q_dedup_minhash", oracle=_minhash_oracle(), headline=True)
+@query("q_dedup_minhash", oracle=_minhash_oracle())
 def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup pairs (md5-family hashes, banded candidate
     join, exact Jaccard verify ≥ 0.5)."""
@@ -562,7 +558,6 @@ _EDGES_REACH_CTES = """
 
 @query(
     "q_dedup_components",
-    headline=True,
     oracle=f"""
     WITH RECURSIVE {_minhash_ctes()},
     {_EDGES_REACH_CTES}
@@ -705,7 +700,7 @@ def _simhash_oracle() -> str:
     """
 
 
-@query("q_dedup_simhash", oracle=_simhash_oracle(), headline=True)
+@query("q_dedup_simhash", oracle=_simhash_oracle())
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs: 32-bit sign projection, byte-band
     candidates, hamming ≤ 3."""
@@ -789,7 +784,6 @@ _WINNOW_CTES = f"""
     {_WINNOW_CTES}
     SELECT id_a, id_b, n_shared FROM wpairs
     """,
-    headline=True,
 )
 def q_dedup_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing near-dup pairs (Schleimer et al. 2003, the MOSS
@@ -870,7 +864,6 @@ def q_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN sizes sb ON id_b = sb.doc_id
     WHERE round(n_inter / least(sa.n, sb.n), 6) >= 0.8
     """,
-    headline=True,
 )
 def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shingle CONTAINMENT pairs >= 0.8: n_inter / min(|A|, |B|) — the
@@ -943,7 +936,6 @@ def _embedding_ivf_oracle() -> str:
 @query(
     "q_dedup_embedding_ivf",
     oracle=_embedding_ivf_oracle(),
-    headline=True,
 )
 def q_dedup_embedding_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-bucketed embedding near-dup pairs ≥ 0.45 — the scale path
@@ -1029,7 +1021,7 @@ _TOPK_ORACLE = f"""
     """
 
 
-@query("q_sim_topk", oracle=_TOPK_ORACLE, headline=True)
+@query("q_sim_topk", oracle=_TOPK_ORACLE)
 def q_sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-5 for query vectors vec_id < 10."""
     e = load_table(spark, sf_dir, "embeddings")
@@ -1087,7 +1079,6 @@ def _ann_oracle() -> str:
 @query(
     "q_sim_ann_lsh",
     oracle=_ann_oracle(),
-    headline=True,
 )
 def q_sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH-bucketed approximate top-5 (sign-random-projection, 4
@@ -1130,7 +1121,7 @@ def _ivf_oracle() -> str:
     """
 
 
-@query("q_sim_ann_ivf", oracle=_ivf_oracle(), headline=True)
+@query("q_sim_ann_ivf", oracle=_ivf_oracle())
 def q_sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-bucketed approximate top-5: corpus quantized to its nearest
     of 8 deterministic seed cells, queries probe their 2 nearest cells
@@ -1501,7 +1492,6 @@ def q_dedup_videos(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_dedup_phash",
-    headline=True,
     oracle="""
     SELECT a.doc_id AS id_a, b.doc_id AS id_b
     FROM documents a JOIN documents b ON b.doc_id = a.doc_id + 1
@@ -1538,7 +1528,6 @@ def q_dedup_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_dedup_phash_jpeg",
-    headline=True,
     oracle="""
     SELECT a.doc_id AS id_a, b.doc_id AS id_b
     FROM documents a JOIN documents b ON b.doc_id = a.doc_id + 1
@@ -1606,7 +1595,6 @@ def q_dedup_phash_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_dedup_phash_progressive",
-    headline=True,
     oracle="""
     SELECT a.doc_id AS id_a, b.doc_id AS id_b
     FROM documents a JOIN documents b ON b.doc_id = a.doc_id + 1
@@ -1689,7 +1677,6 @@ def q_dedup_phash_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_dedup_audiohash",
-    headline=True,
     oracle="""
     SELECT a.doc_id AS id_a, b.doc_id AS id_b
     FROM documents a JOIN documents b ON b.doc_id = a.doc_id + 1
@@ -1721,7 +1708,6 @@ def q_dedup_audiohash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_pipeline_media",
-    headline=True,
     oracle="""
     SELECT d.doc_id, CAST(8 AS INT) AS width, CAST(8 AS INT) AS height,
            TRUE AS mean_ok
@@ -1979,7 +1965,6 @@ def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_decontaminate",
-    headline=True,
     oracle=f"""
     WITH {_SHINGLE_CTE},
     bench AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 50 = 0),
@@ -2063,7 +2048,7 @@ def _pii_oracle() -> str:
     """
 
 
-@query("q_pii_redact", oracle=_pii_oracle(), headline=True)
+@query("q_pii_redact", oracle=_pii_oracle())
 def q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII scrubbing: count and redact email/phone/IPv4 matches per
     document (patterns restricted to the Java-regex ∩ RE2 subset so
@@ -2278,7 +2263,6 @@ _MIX_BUDGET_TOKENS = 600
     SELECT doc_id, source, n_tok, cum_tok FROM cum
     WHERE cum_tok <= {_MIX_BUDGET_TOKENS}
     """,
-    headline=True,
 )
 def q_mixture_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data-mixture curation: per source, keep documents (in stable
@@ -2308,7 +2292,6 @@ def q_mixture_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_dedup_lines",
-    headline=True,
     oracle=f"""
     WITH {_TOKS_CTE},
     segs0 AS (
@@ -2407,7 +2390,6 @@ _SPAN_GRAM_LEN = 8
 
 @query(
     "q_dedup_spans",
-    headline=True,
     oracle=f"""
     WITH {_TOKS_CTE},
     tk AS (SELECT doc_id, ws AS t, CAST(len(ws) AS BIGINT) AS n_tokens
@@ -2513,7 +2495,6 @@ def q_dedup_spans_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_quantize_embeddings",
-    headline=True,
     oracle="""
     WITH q AS (
         SELECT vec_id,
@@ -2771,7 +2752,6 @@ def _pagerank_ctes() -> str:
     GROUP BY component_id
     ORDER BY component_id
     """,
-    headline=True,
 )
 def q_dedup_canonical_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Centrality-based survivor selection: the canonical document per
@@ -2898,7 +2878,6 @@ _SEM_CTES = f"""{_SEM_PAIR_CTES},
     FROM ranked
     GROUP BY component_id
     """,
-    headline=True,
 )
 def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): semantic dedup by
@@ -3135,7 +3114,6 @@ def q_dedup_semantic_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     LEFT JOIN semp s USING (component_id)
     GROUP BY c.component_id
     """,
-    headline=True,
 )
 def q_dedup_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-signal (ensemble) dedup: the LEXICAL near-dup graph
@@ -3803,7 +3781,6 @@ def q_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_extract_html",
-    headline=True,
     oracle="""
     SELECT doc_id,
            CAST(4 + doc_id % 3

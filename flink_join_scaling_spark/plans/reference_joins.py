@@ -58,7 +58,6 @@ SELECT event_id, epoch_ms(ts) AS ts_ms, user_id, event_type, value FROM events
         ORDER BY ts_ms DESC, user_id DESC, event_type DESC, value DESC
     ) = 1
     """,
-    headline=True,
 )
 def q_dedup_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O4: last-writer-wins per entity id over the events stream."""
@@ -94,7 +93,6 @@ _O_COLS = ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderp
     FROM customer c FULL OUTER JOIN (SELECT {", ".join(_O_COLS)} FROM orders) o
       ON c.c_custkey = o.o_custkey
     """,
-    headline=True,
 )
 def q_join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O6: versioned full-outer customer⋈orders on custkey.
@@ -178,7 +176,6 @@ def q_join_left_outer_seq(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM supplier GROUP BY s_nationkey
     ) sg ON cg.c_nationkey = sg.s_nationkey
     """,
-    headline=True,
 )
 def q_join_full_outer_seq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O9: true cogroup shape (Seq[X], Seq[Y]) per key — customers vs

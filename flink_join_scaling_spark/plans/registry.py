@@ -36,19 +36,16 @@ class QuerySpec:
     name: str
     fn: QueryFn
     oracle: str | None = None  # DuckDB SQL; None → rows-only check
-    headline: bool = False  # included in bench.py
 
 
 QUERIES: dict[str, QuerySpec] = {}
 
 
-def query(
-    name: str, oracle: str | None = None, headline: bool = False
-) -> Callable[[QueryFn], QueryFn]:
+def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     def deco(fn: QueryFn) -> QueryFn:
         if name in QUERIES:
             raise ValueError(f"duplicate query name {name!r}")
-        QUERIES[name] = QuerySpec(name, fn, oracle, headline)
+        QUERIES[name] = QuerySpec(name, fn, oracle)
         return fn
 
     return deco
@@ -60,7 +57,3 @@ def query_fns() -> dict[str, QueryFn]:
 
 def oracle_sqls() -> dict[str, str]:
     return {n: s.oracle for n, s in QUERIES.items() if s.oracle is not None}
-
-
-def headline_queries() -> list[str]:
-    return [n for n, s in QUERIES.items() if s.headline]

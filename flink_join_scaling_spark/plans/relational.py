@@ -66,7 +66,6 @@ def q_scan_filter_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem
     GROUP BY l_returnflag, l_linestatus
     """,
-    headline=True,
 )
 def q_agg_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
@@ -208,7 +207,6 @@ def q_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal DESC, c_custkey ASC)
     ) WHERE rn <= 10
     """,
-    headline=True,
 )
 def q_window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _t(spark, sf_dir, "customer")
@@ -501,7 +499,6 @@ def q_array_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE l_shipdate <= TIMESTAMP '2000-09-02'
     GROUP BY l_returnflag, l_linestatus
     """,
-    headline=True,
 )
 def q_tpch_q1_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
@@ -539,7 +536,6 @@ def q_tpch_q1_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY revenue DESC, l.l_orderkey ASC
     LIMIT 10
     """,
-    headline=True,
 )
 def q_tpch_q3_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-way join + agg + top-k. customer(filtered) is small relative to
@@ -587,7 +583,6 @@ def q_tpch_q3_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND o.o_orderdate <  TIMESTAMP '1999-01-01'
     GROUP BY n.n_name
     """,
-    headline=True,
 )
 def q_tpch_q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """6-way star join; bounded dims (nation, region) are explicitly

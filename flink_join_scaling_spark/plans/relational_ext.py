@@ -22,7 +22,6 @@ EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
     WHERE EXISTS (SELECT 1 FROM orders o
                   WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 150000)
     """,
-    headline=True,
 )
 def q_join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-semi join: customers with at least one large order. One
@@ -114,7 +113,6 @@ def q_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(avg(l_quantity), 4) AS mean
     FROM lineitem GROUP BY l_returnflag
     """,
-    headline=True,
 )
 def q_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact interpolated percentiles per group (Spark ``percentile`` ≡
@@ -485,7 +483,6 @@ def q_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
            string_agg(node, ',' ORDER BY node) AS members
     FROM comp GROUP BY canonical_name
     """,
-    headline=True,
 )
 def q_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end entity resolution: the q_fuzzy_match candidate pairs

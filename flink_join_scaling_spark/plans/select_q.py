@@ -152,7 +152,6 @@ def _nb_apply_oracle() -> str:
 @query(
     "q_nb_lang_apply",
     oracle=_nb_apply_oracle(),
-    headline=True,
 )
 def q_nb_lang_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Score every document under the trained NB model and emit the
@@ -556,7 +555,6 @@ def _pipeline_trained_oracle() -> str:
 @query(
     "q_pipeline_trained",
     oracle=_pipeline_trained_oracle(),
-    headline=True,
 )
 def q_pipeline_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ALL THREE trained models composed into one curation pipeline —

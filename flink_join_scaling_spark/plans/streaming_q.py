@@ -35,7 +35,6 @@ _FMT_DUCK = "%Y-%m-%d %H:%M:%S"
     FROM events
     GROUP BY 1, 2
     """,
-    headline=True,
 )
 def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour windows (epoch-aligned, = date_trunc)."""

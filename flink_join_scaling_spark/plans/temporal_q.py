@@ -42,7 +42,6 @@ def _typed_events(spark: SparkSession, sf_dir: str, event_type: str) -> DataFram
     FROM p ASOF LEFT JOIN c
       ON p.user_id = c.user_id AND p.ts_us >= c.ts_us
     """,
-    headline=True,
 )
 def q_join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Backward as-of: each purchase picks the user's most recent click
@@ -77,7 +76,6 @@ _RANGE_US = 10 * 60 * 1_000_000  # 10 minutes in micros
      AND v.ts_us <= e.ts_us
     GROUP BY e.event_id
     """,
-    headline=True,
 )
 def q_join_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interval join: views by the same user in the 10 minutes before
@@ -414,7 +412,6 @@ def q_rollup_multires(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_scd2_intervals",
-    headline=True,
     oracle="""
     WITH e AS (
       SELECT user_id, event_type, epoch_ms(ts) AS ts_ms, event_id FROM events

@@ -233,7 +233,6 @@ def q_tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE p.p_name LIKE '%widget%'
     GROUP BY 1, 2
     """,
-    headline=True,
 )
 def q_tpch_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q9 shape (product-type profit): profit by supplier nation
@@ -601,7 +600,6 @@ def q_tpch_q20_excess_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY numwait DESC, s_name
     LIMIT 20
     """,
-    headline=True,
 )
 def q_tpch_q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q21 shape (suppliers who kept orders waiting): the

@@ -73,8 +73,8 @@ def get_spark(
 
     ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` or the CPUs this process
     may run on.
-    ``max_partition_bytes`` sizes file-scan splits: leave None (Spark's
-    128m) on a real cluster reading TB-scale tables; set small (e.g.
+    ``max_partition_bytes`` sizes file-scan splits: None keeps Spark's
+    128m, right for a real cluster reading TB-scale tables; set small (e.g.
     "8m") when the inputs are tiny relative to cores, else every scan
     collapses to one task and the cluster idles (a 10 MB file at the
     default split size is a single-task scan on 32 cores).
@@ -83,8 +83,6 @@ def get_spark(
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or _default_cpus())
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 4)
-    if max_partition_bytes is None:
-        max_partition_bytes = os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES")
     # Shuffle/spill scratch (spark.local.dir): put it on the fastest
     # local storage available (guide §2.1/§9 — local disk bandwidth and
     # open() latency bound the shuffle). r18 jstack sampling of a

@@ -1,11 +1,12 @@
 #!/usr/bin/env python
 """Per-query job/stage profiler (optimization-round tooling).
 
-Runs one or more registered queries the same way bench.py does (noop
-sink, warmup pass, then timed passes) with the Spark UI enabled, and
-dumps the per-job wall times + stage task summaries from the UI REST
-API — the empirical loop of the optimization guide §1 without needing
-a browser. Usage:
+Runs each named registered query into the noop sink twice with the
+Spark UI enabled: a warmup pass, then a timed pass, releasing pinned
+blocks after each. For the timed pass it prints the wall time and each
+job's wall, task and stage counts from the UI REST API, so the gap
+between the job walls and the pass wall shows the driver's planning
+time. Usage:
 
     python scripts/profile_query.py q_dedup_minhash [q_... ...]
 
@@ -52,7 +53,7 @@ def main() -> None:
     for name in names:
         fn = plans.QUERIES[name].fn
         force(fn(spark, sf_dir))  # warmup
-        # release pinned blocks like bench.py
+        # release pinned blocks so the timed pass pays only for its own
         try:
             for rdd in sc._jsc.getPersistentRDDs().values():
                 rdd.unpersist(False)

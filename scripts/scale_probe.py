@@ -534,7 +534,7 @@ def main() -> None:
     def plan_probe(name):
         # noop sink, not count(): a count over a join against a
         # unique-keyed aggregate lets Catalyst eliminate the join and
-        # everything under it (bench.py's r7 methodology note)
+        # everything under it
         def run(sf_dir):
             plans.QUERIES[name].fn(spark, sf_dir).write.format(
                 "noop"

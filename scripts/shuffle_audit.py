@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Measured shuffle/input volumes per headline query (SCALING.md).
+"""Measured shuffle volumes per registered query (SCALING.md).
 
 The plan-guard suite proves plan SHAPES (pushdown, broadcast, partial
 aggs); this audit measures the actual bytes: per query, the delta of
@@ -9,8 +9,8 @@ become numbers: a dedup query whose shuffle volume is a small fraction
 of its input is demonstrably moving pair sets / sketches, not the
 corpus.
 
-Usage: python scripts/shuffle_audit.py [query ...]
-Prints one markdown row per query at $SPARK_GRAFT_SF_DIR (sf0.1).
+Usage: python scripts/shuffle_audit.py query [query ...]
+Prints one markdown row per named query at $SPARK_GRAFT_SF_DIR (sf0.1).
 """
 
 from __future__ import annotations
@@ -43,6 +43,10 @@ def _totals(ui: str, app: str) -> dict:
 
 
 def main() -> None:
+    names = sys.argv[1:]
+    if not names:
+        print("usage: shuffle_audit.py q_name [q_name ...]")
+        raise SystemExit(2)
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     spark = get_spark(
         app_name="fjss-shuffle-audit", cpus=cpus, shuffle_partitions=cpus,
@@ -50,9 +54,6 @@ def main() -> None:
     )
     ui = spark.sparkContext.uiWebUrl
     app = _api(ui, "applications")[0]["id"]
-    names = sys.argv[1:] or [
-        n for n, s in plans.QUERIES.items() if s.headline
-    ]
     # NOTE: stage-level inputBytes is NOT reported (measured: a full
     # 11 MB lineitem scan shows ~17 KB — the vectorized parquet
     # reader's bytes-read metric is unreliable in this build), so the
@@ -64,7 +65,7 @@ def main() -> None:
     # noop sink, not count(): Catalyst eliminates a count over a join
     # against a unique-keyed aggregate — q_dedup_spans measured ZERO
     # shuffle under count() because its whole pipeline was optimized
-    # away (bench.py's r7 methodology note)
+    # away
     def force(df) -> None:
         df.write.format("noop").mode("overwrite").save()
 

@@ -13,6 +13,7 @@ B⋈C test, ``JoinSpec.scala:289-312`` — and version-timestamp ties).
 
 from __future__ import annotations
 
+import contextlib
 import random
 
 import pytest
@@ -151,9 +152,13 @@ KEY_SHAPES = {
     "overlap": (["k", "a"], ["k", "b"]),
     "disjoint": (["k", "a"], ["m", "b"]),
 }
-#: CONFIGS with the single key id/ida, then the key shapes on CONFIGS[0]
-#: and a self-join: B to the B entities whose ida is its id
-JOIN_CASES = CONFIGS + [pytest.param((*CONFIGS[0], s), id=s) for s in [*KEY_SHAPES, "self"]]
+#: CONFIGS with the single key id/ida, then the key shapes on CONFIGS[0],
+#: a self-join (B to the B entities whose ida is its id) and a key
+#: ``k`` == ida on y beside an ``x_id`` column on x, the name x's ``id``
+#: would be prefixed to
+JOIN_CASES = CONFIGS + [
+    pytest.param((*CONFIGS[0], s), id=s) for s in [*KEY_SHAPES, "self", "prefixed"]
+]
 A_FIELDS = ["id", "ts", "tag"]
 B_FIELDS = ["id", "ts", "ida", "tag"]
 
@@ -175,21 +180,35 @@ def test_join_family_matches_oracle(spark, cfg, how):
     xk, yk, a_fields = "id", "ida", A_FIELDS
     if shape == ["self"]:
         a, dfa, a_fields = b, dfb, B_FIELDS
+    elif shape == ["prefixed"]:
+        xk, yk = "id", "k"
+        dfa = dfa.withColumn("x_id", F.col("id"))
+        dfb = dfb.withColumn("k", F.col("ida"))
     elif shape:
         xk, yk = KEY_SHAPES[shape[0]]
         dfa = dfa.withColumn(xk[0], F.col("id")).withColumn(xk[1], F.col("id") + 100)
         dfb = dfb.withColumn(yk[0], F.col("ida")).withColumn(yk[1], F.col("ida") + 100)
+    # the pair ops would output x's id and x_id both as x_id; the Seq
+    # ops join grouped frames, which carry no x_id
+    clash = shape == ["prefixed"] and how in ("full_outer", "left_outer", "inner")
     # A ids are unique per key (id IS the key) → the left ops' per-key
     # collapse equals per-id dedup, so the oracle applies unchanged
-    if how == "full_outer":
-        res = join_full_outer(dfa, dfb, xk, yk, "id", "id", "ts", "ts")
-    elif how in ("left_outer", "left_outer_seq"):
-        op = join_left_outer if how == "left_outer" else join_left_outer_seq
-        res = op(dfa, dfb, xk, yk, "id", "ts", "ts")
-    elif how == "inner":
-        res = join_inner(dfa, dfb, xk, yk, "id", "id", "ts", "ts")
-    else:
-        res = join_full_outer_seq(dfa, dfb, xk, yk, "id", "id", "ts", "ts")
+    with (
+        pytest.raises(ValueError, match=r"'x_id' would come from x\.id and x\.x_id.*x_prefix")
+        if clash
+        else contextlib.nullcontext()
+    ):
+        if how == "full_outer":
+            res = join_full_outer(dfa, dfb, xk, yk, "id", "id", "ts", "ts")
+        elif how in ("left_outer", "left_outer_seq"):
+            op = join_left_outer if how == "left_outer" else join_left_outer_seq
+            res = op(dfa, dfb, xk, yk, "id", "ts", "ts")
+        elif how == "inner":
+            res = join_inner(dfa, dfb, xk, yk, "id", "id", "ts", "ts")
+        else:
+            res = join_full_outer_seq(dfa, dfb, xk, yk, "id", "id", "ts", "ts")
+    if clash:
+        return
     rows = res.collect()
 
     if how == "left_outer_seq":
