@@ -32,11 +32,14 @@ y key *i* by position whatever the names (equal, permuted, partly
 shared, disjoint; x may be y). Output columns, whatever the key names:
 
 - O6/O7/O10: x's columns, then y's; a name on both sides gets its
-  side's prefix (``x_``/``y_`` by default), so both key columns appear.
-- O8 ``join_left_outer_seq``: x's columns in x's order, then ``seq_col``.
+  side's prefix, ``x_`` or ``y_``, so both key columns appear.
+- O8 ``join_left_outer_seq``: x's columns in x's order, then ``ys``.
 - O9 ``join_full_outer_seq``: one coalesced key column per key position
   (``key_col`` for a single key, x's key names for a composite key),
-  then ``xs_col`` and ``ys_col``.
+  then ``xs`` and ``ys``.
+
+An output name that would occur twice raises ``ValueError`` naming it;
+renaming the input column resolves it.
 
 Known reference divergences, intentional:
 - The reference dedups per id *within* a key's window state, so an
@@ -81,8 +84,6 @@ def _joined(
     x_key: str | Sequence[str],
     y_key: str | Sequence[str],
     how: str,
-    x_prefix: str = "x_",
-    y_prefix: str = "y_",
 ) -> tuple[DataFrame, dict[str, str], dict[str, str]]:
     """Join x to y on x key *i* == y key *i*, after prefixing the column
     names that collide across sides. Returns the joined frame and each
@@ -90,15 +91,15 @@ def _joined(
     prefixed name is already taken (x ``id`` -> ``x_id`` beside x's own
     ``x_id``)."""
     common = set(x.columns) & set(y.columns)
-    x_map = {c: (x_prefix + c if c in common else c) for c in x.columns}
-    y_map = {c: (y_prefix + c if c in common else c) for c in y.columns}
+    x_map = {c: ("x_" + c if c in common else c) for c in x.columns}
+    y_map = {c: ("y_" + c if c in common else c) for c in y.columns}
     taken: dict[str, str] = {}
     for side, m in (("x", x_map), ("y", y_map)):
         for c, n in m.items():
             if n in taken:
                 raise ValueError(
                     f"join output column {n!r} would come from {taken[n]} and "
-                    f"{side}.{c}; rename one or pass another x_prefix/y_prefix"
+                    f"{side}.{c}; rename one of the columns"
                 )
             taken[n] = f"{side}.{c}"
     if common:  # each extra projection costs a driver-side analysis
@@ -109,9 +110,19 @@ def _joined(
     return x.join(y, on=cond, how=how), x_map, y_map
 
 
+def _check_distinct(names: list[str]) -> None:
+    """Raise ``ValueError`` naming a name that occurs twice in a Seq
+    join's output or grouped columns: a list column (``xs``/``ys``)
+    beside a key or input column of the same name."""
+    dup = [n for i, n in enumerate(names) if n in names[:i]]
+    if dup:
+        raise ValueError(f"join column {dup[0]!r} would occur twice; rename the input column")
+
+
 def _grouped(df: DataFrame, key: str | Sequence[str], list_col: str) -> DataFrame:
     """One row per key: the key columns and ``list_col``, the array of
     the key's rows as structs."""
+    _check_distinct([*_as_list(key), list_col])
     rows = F.collect_list(F.struct(*[F.col(c) for c in df.columns]))
     return df.groupBy(*_as_list(key)).agg(rows.alias(list_col))
 
@@ -130,15 +141,13 @@ def join_full_outer(
     y_id: str | Sequence[str],
     x_ts: str,
     y_ts: str,
-    x_prefix: str = "x_",
-    y_prefix: str = "y_",
 ) -> DataFrame:
     """O6 ``JoinFullOuter`` (``joins.scala:10-23``): latest-per-id both
     sides, then per key the null-padded cross product — which is
     precisely SQL FULL OUTER JOIN on the key."""
     dx = dedup_latest(x, x_id, x_ts)
     dy = dedup_latest(y, y_id, y_ts)
-    return _joined(dx, dy, x_key, y_key, "full_outer", x_prefix, y_prefix)[0]
+    return _joined(dx, dy, x_key, y_key, "full_outer")[0]
 
 
 def join_left_outer(
@@ -149,14 +158,12 @@ def join_left_outer(
     y_id: str | Sequence[str],
     x_ts: str,
     y_ts: str,
-    x_prefix: str = "x_",
-    y_prefix: str = "y_",
 ) -> DataFrame:
     """O7 ``JoinLeftOuter`` (``joins.scala:24-37``): one latest X per
     *key* joined to each latest-per-id Y; right-only keys dropped."""
     dx = dedup_latest_by_key(x, x_key, x_ts)
     dy = dedup_latest(y, y_id, y_ts)
-    return _joined(dx, dy, x_key, y_key, "left_outer", x_prefix, y_prefix)[0]
+    return _joined(dx, dy, x_key, y_key, "left_outer")[0]
 
 
 def join_left_outer_seq(
@@ -167,22 +174,22 @@ def join_left_outer_seq(
     y_id: str | Sequence[str],
     x_ts: str,
     y_ts: str,
-    seq_col: str = "ys",
 ) -> DataFrame:
     """O8 ``JoinLeftOuterSeq`` (``joins.scala:39-54``), the reference's
     ``(X, Seq[Y])``: x's columns in x's order (one latest X per key),
-    then ``seq_col``, the array of the key's latest-per-id Y rows as
+    then ``ys``, the array of the key's latest-per-id Y rows as
     structs; empty (never null) when unmatched, as in
     ``cogroupFunctions.scala:50-62``. Y is grouped to one array row per
     key *before* the join, so the left join is 1:1 and Catalyst may
     broadcast the grouped side if small.
     """
+    _check_distinct([*x.columns, "ys"])
     dx = dedup_latest_by_key(x, x_key, x_ts)
-    gy = _grouped(dedup_latest(y, y_id, y_ts), y_key, seq_col)
+    gy = _grouped(dedup_latest(y, y_id, y_ts), y_key, "ys")
     out, x_map, y_map = _joined(dx, gy, x_key, y_key, "left_outer")
     return out.select(
         *[F.col(x_map[c]).alias(c) for c in dx.columns],
-        _or_empty(out, y_map[seq_col]).alias(seq_col),
+        _or_empty(out, y_map["ys"]).alias("ys"),
     )
 
 
@@ -196,26 +203,25 @@ def join_full_outer_seq(
     x_ts: str,
     y_ts: str,
     key_col: str = "key",
-    xs_col: str = "xs",
-    ys_col: str = "ys",
 ) -> DataFrame:
     """O9 ``JoinFullOuterSeq`` (``joins.scala:56-70``): per key emit
     ``(Seq[X], Seq[Y])`` of latest-per-id versions as structs, either
     side possibly empty (``cogroupFunctions.scala:64-73``). Output: one
     key column per key position, whichever side's key is present
     (``key_col`` for a single key, x's key names for a composite key),
-    then ``xs_col`` and ``ys_col``, never null. Composition: each side
-    grouped to one array row per key, full-outer-joined on the key.
+    then ``xs`` and ``ys``, never null. Composition: each side grouped
+    to one array row per key, full-outer-joined on the key.
     """
     xk, yk = _as_list(x_key), _as_list(y_key)
-    gx = _grouped(dedup_latest(x, x_id, x_ts), xk, xs_col)
-    gy = _grouped(dedup_latest(y, y_id, y_ts), yk, ys_col)
-    out, x_map, y_map = _joined(gx, gy, xk, yk, "full_outer")
     names = [key_col] if len(xk) == 1 else xk
+    _check_distinct([*names, "xs", "ys"])
+    gx = _grouped(dedup_latest(x, x_id, x_ts), xk, "xs")
+    gy = _grouped(dedup_latest(y, y_id, y_ts), yk, "ys")
+    out, x_map, y_map = _joined(gx, gy, xk, yk, "full_outer")
     return out.select(
         *[F.coalesce(F.col(x_map[a]), F.col(y_map[b])).alias(n) for a, b, n in zip(xk, yk, names)],
-        _or_empty(out, x_map[xs_col]).alias(xs_col),
-        _or_empty(out, y_map[ys_col]).alias(ys_col),
+        _or_empty(out, x_map["xs"]).alias("xs"),
+        _or_empty(out, y_map["ys"]).alias("ys"),
     )
 
 
@@ -228,12 +234,10 @@ def join_inner(
     y_id: str | Sequence[str],
     x_ts: str,
     y_ts: str,
-    x_prefix: str = "x_",
-    y_prefix: str = "y_",
 ) -> DataFrame:
     """O10 ``cgfInner`` (``cogroupFunctions.scala:74-87`` — dead code in
     the reference, live here): latest-per-id cross product when both
     sides are present."""
     dx = dedup_latest(x, x_id, x_ts)
     dy = dedup_latest(y, y_id, y_ts)
-    return _joined(dx, dy, x_key, y_key, "inner", x_prefix, y_prefix)[0]
+    return _joined(dx, dy, x_key, y_key, "inner")[0]

@@ -147,9 +147,7 @@ def q_join_left_outer_seq(spark: SparkSession, sf_dir: str) -> DataFrame:
     (empty when unmatched). Serialized to a sorted CSV for the oracle."""
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders").withColumn("_ts", F.col("o_orderdate"))
-    out = join_left_outer_seq(
-        c, o, "c_custkey", "o_custkey", "o_orderkey", "c_acctbal", "_ts", seq_col="ys"
-    )
+    out = join_left_outer_seq(c, o, "c_custkey", "o_custkey", "o_orderkey", "c_acctbal", "_ts")
     return out.select(
         "c_custkey",
         "c_name",
@@ -192,8 +190,6 @@ def q_join_full_outer_seq(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_acctbal",
         "s_acctbal",
         key_col="nationkey",
-        xs_col="xs",
-        ys_col="ys",
     )
     return out.select(
         F.col("nationkey").cast("int").alias("nationkey"),

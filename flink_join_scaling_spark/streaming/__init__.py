@@ -8,12 +8,13 @@ flink_perf/joins.scala:18-20``, ``VersioningEvictor.scala:10-29``).
 
 Spark mapping (SURVEY §3.4/§4.2): micro-batch update mode ≙ a batched
 CountTrigger — each micro-batch re-emits results for exactly the keys
-that received data, and keep-latest state in ``applyInPandasWithState``
-stores one row per (key, id), which is the reference's evictor with
-*perfect* (every-record, not every-5th) compaction and none of its
-O(n²)-per-key re-scan. (``transformWithStateInPandas`` is the Spark-4
-successor API, unusable here: its state protocol imports ``protobuf``,
-not installed in this environment.)
+that received data. The versioned join's ``applyInPandasWithState``
+state is one row per key holding one id→latest-version map per side,
+which is the reference's evictor with *perfect* (every-record, not
+every-5th) compaction and none of its O(n²)-per-key re-scan.
+(``transformWithStateInPandas`` is the Spark-4 successor API, unusable
+here: its state protocol imports ``protobuf``, not installed in this
+environment.)
 """
 
 from flink_join_scaling_spark.streaming.harness import (  # noqa: F401
@@ -35,8 +36,6 @@ from flink_join_scaling_spark.streaming.sketches import (  # noqa: F401
 )
 from flink_join_scaling_spark.streaming.joins import (  # noqa: F401
     stream_join_versioned,
-    stream_join_versioned_grouped,
-    stream_join_versioned_grouped_typed,
     stream_join_versioned_typed,
     stream_stream_join_within,
 )

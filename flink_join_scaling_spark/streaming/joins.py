@@ -56,6 +56,10 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 #: versions per side
 GROUPED_OUT_SCHEMA = "k string, xs_json string, ys_json string"
 
+#: the ``how`` values of :func:`stream_join_versioned`: the pair
+#: variants, then the Seq (grouped) variants
+_HOWS = ("full_outer", "left_outer", "inner", "full_outer_seq", "left_outer_seq")
+
 #: per-key state: two JSON maps  id -> [ts, payload]  (one per side)
 _STATE_SCHEMA = "xs string, ys string"
 
@@ -220,33 +224,6 @@ def _with_null_subkey(union: DataFrame, how: str) -> DataFrame:
     )
 
 
-def stream_join_versioned_grouped(
-    sx: DataFrame,
-    sy: DataFrame,
-    key_x,
-    key_y,
-    id_x,
-    id_y,
-    ts_x,
-    ts_y,
-    how: str = "full_outer_seq",
-) -> DataFrame:
-    """Streaming grouped versioned join (reference O8/O9 continuous):
-    the state function's changelog of (k, xs_json, ys_json) as it is —
-    per touched key, the JSON arrays of current latest versions per
-    side, ordered by entity id. One output row per key per micro-batch
-    instead of the exploded variant's cross product.
-
-    Converged semantics (last emission per key) equal batch
-    ``join_full_outer_seq`` / ``join_left_outer_seq``. For
-    ``left_outer_seq``, ``id_x`` is unused: a key keeps its latest X
-    only, as in batch; on equal ts the stream picks the X with the
-    greater payload JSON, which may differ from batch's pick."""
-    if how not in ("full_outer_seq", "left_outer_seq"):
-        raise ValueError(f"unsupported how={how!r}")
-    return _stateful_join(sx, sy, key_x, key_y, id_x, id_y, ts_x, ts_y, how, None)
-
-
 def stream_stream_join_within(
     sx: DataFrame,
     sy: DataFrame,
@@ -301,17 +278,25 @@ def stream_join_versioned(
     how: str = "full_outer",
     ttl_ms: int | None = None,
 ) -> DataFrame:
-    """Streaming versioned join of two tagged streams; returns the
-    changelog DataFrame (k, x_payload, y_payload): per touched key, the
-    null-padded cross product of its current latest versions. The
-    pairs come from the grouped changelog by a JVM-side
-    ``explode_outer`` of each side's JSON array, so the Python state
-    function emits one row per key whatever the product's size.
+    """Streaming versioned join of two tagged streams (reference
+    O6-O10 continuous); returns the update-mode changelog. Per touched
+    key, one micro-batch emits the key's whole current join result:
+
+    - ``full_outer`` / ``left_outer`` / ``inner`` (O6/O7/O10):
+      ``(k, x_payload, y_payload)``, the null-padded cross product of
+      the key's current latest versions. The pairs come from the
+      grouped changelog by a JVM-side ``explode_outer`` of each side's
+      JSON array, so the Python state function emits one row per key
+      whatever the product's size.
+    - ``full_outer_seq`` / ``left_outer_seq`` (O8/O9):
+      ``(k, xs_json, ys_json)``, the state function's changelog as it
+      is: JSON arrays of the key's current latest versions per side,
+      ordered by entity id, ``"[]"`` for an empty side.
 
     Converged semantics (last emission per key) equal the batch
     ``operators.joins`` counterparts; tests assert that equivalence.
-    For ``left_outer``, ``id_x`` is unused: a key keeps its latest X
-    only, as batch ``join_left_outer`` does; on equal ts the stream
+    For the left variants, ``id_x`` is unused: a key keeps its latest X
+    only, as batch ``dedup_latest_by_key`` does; on equal ts the stream
     picks the X with the greater payload JSON, which may differ from
     batch's pick.
 
@@ -319,11 +304,14 @@ def stream_join_versioned(
     this is where state actually grows (the repo's namesake concern);
     default keeps reference-faithful forever-state.
 
-    Unwrap payloads with ``F.from_json(col, schema)`` downstream.
+    Unwrap payloads with ``F.from_json(col, schema)`` downstream, or
+    use :func:`stream_join_versioned_typed`.
     """
-    if how not in ("full_outer", "left_outer", "inner"):
-        raise ValueError(f"unsupported how={how!r}")
+    if how not in _HOWS:
+        raise ValueError(f"unsupported how={how!r}; expected one of {', '.join(_HOWS)}")
     grouped = _stateful_join(sx, sy, key_x, key_y, id_x, id_y, ts_x, ts_y, how, ttl_ms)
+    if how.endswith("_seq"):
+        return grouped
 
     def explode(col: str) -> F.Column:
         return F.explode_outer(F.from_json(col, "array<string>"))
@@ -345,10 +333,13 @@ def stream_join_versioned_typed(
     how: str = "full_outer",
     ttl_ms: int | None = None,
 ) -> DataFrame:
-    """Typed façade over :func:`stream_join_versioned`: the changelog
-    as (k, x struct, y struct) — the reference's ``(Option[X],
-    Option[Y])`` pair shape (``cogroupFunctions.scala:7-30``) with each
-    side's full input schema restored, nulls marking the absent side.
+    """Typed façade over :func:`stream_join_versioned`, each side's
+    full input schema restored: the pair variants as ``(k, x struct,
+    y struct)``, the reference's ``(Option[X], Option[Y])`` shape
+    (``cogroupFunctions.scala:7-30``) with nulls marking the absent
+    side; the Seq variants as ``(k, xs array<struct>, ys
+    array<struct>)``, the reference's ``(Seq[X], Seq[Y])`` shape
+    (``cogroupFunctions.scala:50-73``).
 
     The JSON payload is an implementation detail of the schema-generic
     state processor; this wrapper re-applies the inputs' own schemas
@@ -359,37 +350,18 @@ def stream_join_versioned_typed(
     out = stream_join_versioned(
         sx, sy, key_x, key_y, id_x, id_y, ts_x, ts_y, how=how, ttl_ms=ttl_ms
     )
-    return out.select(
-        F.col("k"),
-        F.from_json("x_payload", sx.schema).alias("x"),
-        F.from_json("y_payload", sy.schema).alias("y"),
-    )
+    if not how.endswith("_seq"):
+        return out.select(
+            F.col("k"),
+            F.from_json("x_payload", sx.schema).alias("x"),
+            F.from_json("y_payload", sy.schema).alias("y"),
+        )
 
-
-def stream_join_versioned_grouped_typed(
-    sx: DataFrame,
-    sy: DataFrame,
-    key_x,
-    key_y,
-    id_x,
-    id_y,
-    ts_x,
-    ts_y,
-    how: str = "full_outer_seq",
-) -> DataFrame:
-    """Typed façade over :func:`stream_join_versioned_grouped`: the
-    changelog as (k, xs array<struct>, ys array<struct>) — the
-    reference's ``(Seq[X], Seq[Y])`` shape (``cogroupFunctions.scala:
-    50-73``) with each side's input schema restored, so callers index
-    and project struct fields natively. Same narrow projection cost as
-    the exploded typed façade: no extra shuffle or state."""
-    out = stream_join_versioned_grouped(
-        sx, sy, key_x, key_y, id_x, id_y, ts_x, ts_y, how=how
-    )
     def typed(col: str, schema) -> F.Column:
         return F.transform(
             F.from_json(col, "array<string>"), lambda s: F.from_json(s, schema)
         )
+
     return out.select(
         F.col("k"),
         typed("xs_json", sx.schema).alias("xs"),

@@ -13,6 +13,7 @@ from __future__ import annotations
 import os
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from flink_join_scaling_spark.streaming.dedup import stream_dedup_latest
@@ -100,9 +101,7 @@ def test_grouped_join_state_survives_restart(streaming_spark, tmp_path):
     """
     import json
 
-    from flink_join_scaling_spark.streaming.joins import (
-        stream_join_versioned_grouped,
-    )
+    from flink_join_scaling_spark.streaming.joins import stream_join_versioned
 
     spark = streaming_spark
     src_x = str(tmp_path / "x")
@@ -115,7 +114,7 @@ def test_grouped_join_state_survives_restart(streaming_spark, tmp_path):
     y_schema = spark.createDataFrame([], "id long, ts long, kb long, tag string").schema
 
     def run():
-        out = stream_join_versioned_grouped(
+        out = stream_join_versioned(
             _read_stream(spark, src_x, x_schema),
             _read_stream(spark, src_y, y_schema),
             "ka", "kb", "id", "id", "ts", "ts",
@@ -213,10 +212,12 @@ def test_state_ttl_evicts_idle_keys(streaming_spark, tmp_path):
         spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", old)
 
 
-def test_join_state_ttl_evicts_idle_keys(streaming_spark, tmp_path):
-    """Same TTL contract on the versioned join: an idle key's two-side
-    state is evicted, so a later right-side arrival emits as a
-    right-only row instead of pairing with the forgotten left."""
+@pytest.mark.parametrize("how", ["full_outer", "full_outer_seq"])
+def test_join_state_ttl_evicts_idle_keys(streaming_spark, tmp_path, how):
+    """Same TTL contract on the versioned join, pair and Seq variants:
+    an idle key's two-side state is evicted, so a later right-side
+    arrival emits as a right-only row instead of pairing with the
+    forgotten left."""
     import json
     import time
 
@@ -244,7 +245,7 @@ def test_join_state_ttl_evicts_idle_keys(streaming_spark, tmp_path):
                 _read_stream(spark, src_a, a_schema),
                 _read_stream(spark, src_b, b_schema),
                 "id", "ida", "id", "id", "ts", "ts",
-                how="full_outer", ttl_ms=500,
+                how=how, ttl_ms=500,
             )
             _run_once(out, sink, ckpt)
 
@@ -258,8 +259,13 @@ def test_join_state_ttl_evicts_idle_keys(streaming_spark, tmp_path):
 
         em = _emissions(sink)
         last_k1 = em[em["k"].astype(str) == "1"].iloc[-1]
-        assert pd.isna(last_k1["x_payload"])  # left side forgotten
-        assert json.loads(last_k1["y_payload"])["tag"] == "b5"
+        if how == "full_outer":
+            assert pd.isna(last_k1["x_payload"])  # left side forgotten
+            assert json.loads(last_k1["y_payload"])["tag"] == "b5"
+        else:
+            assert last_k1["xs_json"] == "[]"  # left side forgotten
+            ys = json.loads(last_k1["ys_json"])
+            assert [json.loads(p)["tag"] for p in ys] == ["b5"]
     finally:
         spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", old)
 

@@ -157,17 +157,17 @@ def test_abc_chain_conserves_elements(spark, abc_frames):
     (JoinSpec.scala:218-231,254-267 protocol)."""
     abcs, dfa, dfb, dfc = abc_frames
     a_rows, b_rows, c_rows = dissociate(abcs)
-    ab = join_left_outer_seq(dfa, dfb, "id", "ida", "id", "ts", "ts", seq_col="bs")
+    ab = join_left_outer_seq(dfa, dfb, "id", "ida", "id", "ts", "ts")
     assert ab.count() == len({a[0] for a in a_rows})
     from pyspark.sql import functions as F
 
-    b_seen = ab.select(F.explode("bs.id")).count()
+    b_seen = ab.select(F.explode("ys.id")).count()
     db = _dedup(b_rows)
     a_keys = {a[0] for a in a_rows}
     assert b_seen == sum(1 for b in db if b[2] in a_keys)
 
-    bc = join_left_outer_seq(dfb, dfc, "id", "idb", "id", "ts", "ts", seq_col="cs")
-    c_seen = bc.select(F.explode("cs.id")).count()
+    bc = join_left_outer_seq(dfb, dfc, "id", "idb", "id", "ts", "ts")
+    c_seen = bc.select(F.explode("ys.id")).count()
     dc = _dedup(c_rows)
     b_keys = {b[0] for b in b_rows}
     assert c_seen == sum(1 for c in dc if c[2] in b_keys)

@@ -228,7 +228,6 @@ def test_stream_join_grouped_matches_batch(streaming_spark, tmp_path, how):
         join_full_outer_seq,
         join_left_outer_seq,
     )
-    from flink_join_scaling_spark.streaming import stream_join_versioned_grouped
 
     spark = streaming_spark
 
@@ -239,9 +238,7 @@ def test_stream_join_grouped_matches_batch(streaming_spark, tmp_path, how):
         sa = chunked_parquet_stream(spark, a, str(tmp_path / key_a / "a"), n_chunks=3)
         sb = chunked_parquet_stream(spark, b, str(tmp_path / key_a / "b"), n_chunks=3)
         em = collect_emissions(
-            stream_join_versioned_grouped(
-                sa, sb, key_a, "ida", "id", "id", "ts", "ts", how=how
-            )
+            stream_join_versioned(sa, sb, key_a, "ida", "id", "id", "ts", "ts", how=how)
         )
         got = {
             str(r.k): (tags(r.xs_json), tags(r.ys_json))
@@ -267,6 +264,53 @@ def test_stream_join_grouped_matches_batch(streaming_spark, tmp_path, how):
                 for r in batch.collect()
             }
         assert got == exp, key_a
+
+
+@pytest.mark.parametrize(
+    "how", ["full_outer", "left_outer", "inner", "full_outer_seq", "left_outer_seq"]
+)
+def test_stream_join_output_schema_per_how(streaming_spark, tmp_path, how):
+    """One entry point per output type: the pair variants emit one row
+    per (x, y) pairing, the Seq variants one row per key with each
+    side's versions as an array (JSON untyped, structs typed)."""
+    from flink_join_scaling_spark.streaming import stream_join_versioned_typed
+
+    spark = streaming_spark
+    a = spark.createDataFrame([(1, 10, "a1")], A_SCHEMA)
+    b = spark.createDataFrame([(2, 10, 1, "b2")], B_SCHEMA)
+    sa = chunked_parquet_stream(spark, a, str(tmp_path / "a"), n_chunks=1)
+    sb = chunked_parquet_stream(spark, b, str(tmp_path / "b"), n_chunks=1)
+    args = (sa, sb, "id", "ida", "id", "id", "ts", "ts")
+
+    def fields(df):
+        return [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
+
+    xt = "struct<id:bigint,ts:bigint,tag:string>"
+    yt = "struct<id:bigint,ts:bigint,ida:bigint,tag:string>"
+    if how.endswith("_seq"):
+        untyped = [("k", "string"), ("xs_json", "string"), ("ys_json", "string")]
+        typed = [("k", "string"), ("xs", f"array<{xt}>"), ("ys", f"array<{yt}>")]
+    else:
+        untyped = [("k", "string"), ("x_payload", "string"), ("y_payload", "string")]
+        typed = [("k", "string"), ("x", xt), ("y", yt)]
+    assert fields(stream_join_versioned(*args, how=how)) == untyped
+    assert fields(stream_join_versioned_typed(*args, how=how)) == typed
+
+
+def test_stream_join_unknown_how_raises(spark):
+    """Both entry points reject an unknown ``how`` with one error that
+    lists the five variants, before any plan is built."""
+    from flink_join_scaling_spark.streaming import stream_join_versioned_typed
+
+    a = spark.createDataFrame([(1, 10, "a1")], A_SCHEMA)
+    b = spark.createDataFrame([(2, 10, 1, "b2")], B_SCHEMA)
+    for fn in (stream_join_versioned, stream_join_versioned_typed):
+        with pytest.raises(ValueError) as err:
+            fn(a, b, "id", "ida", "id", "id", "ts", "ts", how="right_outer")
+        msg = str(err.value)
+        assert "'right_outer'" in msg
+        for how in ("full_outer", "left_outer", "inner", "full_outer_seq", "left_outer_seq"):
+            assert how in msg
 
 
 def test_stream_join_null_keys_match_batch(streaming_spark, tmp_path):
@@ -337,8 +381,6 @@ def test_stream_join_grouped_null_keys(streaming_spark, tmp_path):
     """Grouped variants: the two sides' null-key groups emit as separate
     per-side rows (matching the batch full-outer join of grouped sides,
     where null keys never meet)."""
-    from flink_join_scaling_spark.streaming import stream_join_versioned_grouped
-
     spark = streaming_spark
     a = spark.createDataFrame(
         [(1, 10, "a1"), (None, 20, "anull"), (None, 30, "anull2")], A_SCHEMA
@@ -347,7 +389,7 @@ def test_stream_join_grouped_null_keys(streaming_spark, tmp_path):
     sa = chunked_parquet_stream(spark, a, str(tmp_path / "a"), n_chunks=2)
     sb = chunked_parquet_stream(spark, b, str(tmp_path / "b"), n_chunks=1)
     em = collect_emissions(
-        stream_join_versioned_grouped(
+        stream_join_versioned(
             sa, sb, "id", "ida", "id", "id", "ts", "ts", how="full_outer_seq"
         )
     )
@@ -543,20 +585,18 @@ def test_stream_watermark_drops_late_rows(streaming_spark, tmp_path):
 
 
 def test_stream_join_grouped_typed_structs(streaming_spark, tmp_path):
-    """Grouped typed façade: (k, xs array<struct>, ys array<struct>)
-    with native field access, converged result equal to the batch
-    grouped join's member sets."""
-    from flink_join_scaling_spark.streaming import (
-        stream_join_versioned_grouped_typed,
-    )
+    """Typed façade, Seq variant: (k, xs array<struct>, ys
+    array<struct>) with native field access, converged result equal to
+    the batch grouped join's member sets."""
+    from flink_join_scaling_spark.streaming import stream_join_versioned_typed
 
     spark = streaming_spark
     a = spark.createDataFrame(_gen_a(4, 2), A_SCHEMA)
     b = spark.createDataFrame(_gen_b(6, 2, ida_max=6), B_SCHEMA)
     sa = chunked_parquet_stream(spark, a, str(tmp_path / "a"), n_chunks=2)
     sb = chunked_parquet_stream(spark, b, str(tmp_path / "b"), n_chunks=2)
-    out = stream_join_versioned_grouped_typed(
-        sa, sb, "id", "ida", "id", "id", "ts", "ts"
+    out = stream_join_versioned_typed(
+        sa, sb, "id", "ida", "id", "id", "ts", "ts", how="full_outer_seq"
     )
     proj = out.select(
         "k",

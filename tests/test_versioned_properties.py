@@ -152,12 +152,24 @@ KEY_SHAPES = {
     "overlap": (["k", "a"], ["k", "b"]),
     "disjoint": (["k", "a"], ["m", "b"]),
 }
+#: name clashes: shape -> (the ops that raise, the error they raise).
+#: ``prefixed``: a key ``k`` == ida on y beside an ``x_id`` column on x,
+#: the name x's ``id`` would be prefixed to (the Seq ops join grouped
+#: frames, which carry no x_id); the others put an input or key column
+#: beside a Seq op's list column of its name
+CLASHES = {
+    "prefixed": (
+        {"full_outer", "left_outer", "inner"},
+        r"'x_id' would come from x\.id and x\.x_id.*rename",
+    ),
+    "x_col_ys": ({"left_outer_seq"}, r"'ys' would occur twice.*rename"),
+    "x_key_xs": ({"full_outer_seq"}, r"'xs' would occur twice.*rename"),
+    "y_key_ys": ({"left_outer_seq", "full_outer_seq"}, r"'ys' would occur twice.*rename"),
+}
 #: CONFIGS with the single key id/ida, then the key shapes on CONFIGS[0],
-#: a self-join (B to the B entities whose ida is its id) and a key
-#: ``k`` == ida on y beside an ``x_id`` column on x, the name x's ``id``
-#: would be prefixed to
+#: a self-join (B to the B entities whose ida is its id) and the clashes
 JOIN_CASES = CONFIGS + [
-    pytest.param((*CONFIGS[0], s), id=s) for s in [*KEY_SHAPES, "self", "prefixed"]
+    pytest.param((*CONFIGS[0], s), id=s) for s in [*KEY_SHAPES, "self", *CLASHES]
 ]
 A_FIELDS = ["id", "ts", "tag"]
 B_FIELDS = ["id", "ts", "ida", "tag"]
@@ -184,20 +196,23 @@ def test_join_family_matches_oracle(spark, cfg, how):
         xk, yk = "id", "k"
         dfa = dfa.withColumn("x_id", F.col("id"))
         dfb = dfb.withColumn("k", F.col("ida"))
+    elif shape == ["x_col_ys"]:
+        dfa = dfa.withColumn("ys", F.col("tag"))
+    elif shape == ["x_key_xs"]:
+        xk = "xs"
+        dfa = dfa.withColumn("xs", F.col("id"))
+    elif shape == ["y_key_ys"]:
+        yk = "ys"
+        dfb = dfb.withColumn("ys", F.col("ida"))
     elif shape:
         xk, yk = KEY_SHAPES[shape[0]]
         dfa = dfa.withColumn(xk[0], F.col("id")).withColumn(xk[1], F.col("id") + 100)
         dfb = dfb.withColumn(yk[0], F.col("ida")).withColumn(yk[1], F.col("ida") + 100)
-    # the pair ops would output x's id and x_id both as x_id; the Seq
-    # ops join grouped frames, which carry no x_id
-    clash = shape == ["prefixed"] and how in ("full_outer", "left_outer", "inner")
+    clash_ops, match = CLASHES.get(shape[0] if shape else "", (set(), None))
+    clash = how in clash_ops
     # A ids are unique per key (id IS the key) → the left ops' per-key
     # collapse equals per-id dedup, so the oracle applies unchanged
-    with (
-        pytest.raises(ValueError, match=r"'x_id' would come from x\.id and x\.x_id.*x_prefix")
-        if clash
-        else contextlib.nullcontext()
-    ):
+    with pytest.raises(ValueError, match=match) if clash else contextlib.nullcontext():
         if how == "full_outer":
             res = join_full_outer(dfa, dfb, xk, yk, "id", "id", "ts", "ts")
         elif how in ("left_outer", "left_outer_seq"):
